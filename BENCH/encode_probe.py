@@ -50,11 +50,11 @@ def _encode_once(seed: int) -> int:
     from engine.mvtcodec.geomstream import quantize
 
     counts, fids, px, py, langs = _make_input(seed)
-    blobs = fastpoints.encode_point_tiles_sorted(
+    buf, starts, total = fastpoints.encode_point_tiles_sorted_raw(
         counts, fids, quantize(px), quantize(py),
         {"lang": ("string", langs)}, "pages", 4096,
     )
-    return sum(len(b) for b in blobs)
+    return int(total.sum())
 
 
 def _worker(args):

@@ -24,8 +24,9 @@ def entry(spark: SparkSession) -> DataFrame:
     from engine.pipeline import fixtures, index, tiler
 
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF0001)))
-    # shuffle-lean encoder (byte-identical to encode_point_tiles;
-    # tests/test_tiler_compact.py asserts it)
+    # shuffle-lean encoder: same Arrow kernel and bytes as
+    # encode_point_tiles, without the materialized x/y/px/py columns
+    # (tests/test_tiler_compact.py checks both against golden digests)
     return tiler.encode_point_tiles_compact(index.with_unit(geo), 0, 4)
 
 

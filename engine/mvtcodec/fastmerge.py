@@ -1,7 +1,8 @@
 """Vectorized merge of salted point-layer partials (SURVEY B14 stage 2).
 
-The salted encoder's stage 1 (engine.pipeline.tiler.encode_point_tiles_salted)
-runs fastpoints.encode_point_features_sorted per (tile, salt) group and
+The salted encoder's stage 1 (engine.pipeline.tiler.encode_point_partials_compact,
+merged by tiler.merge_partial_tiles) runs
+fastpoints.encode_point_features_sorted per (tile, salt) group and
 ships the PARTIAL ARRAYS — framed feature bytes, feature ids, per-feature
 framed/geometry lengths, local dictionary codes, and the local value
 table — instead of assembled tiles. This merge re-frames a tile's partials
@@ -19,7 +20,7 @@ into the canonical single-pass layer with whole-array passes only:
   re-emitted.
 
 Output is BYTE-IDENTICAL to the unsalted single-pass encoder
-(tests/test_tilemerge.py asserts it). Per-feature Python: none — the round-2
+(tests/test_tiler_compact.py asserts it). Per-feature Python: none — the round-2
 merge decoded and re-encoded every feature through the generic per-feature
 path on the single merge task, exactly the skew the salting existed to
 remove.

@@ -227,7 +227,7 @@ def encode_point_features_sorted(
 ) -> dict:
     """Framed feature block + per-tile dictionary arrays for MANY tile
     groups in one vectorized pass — the shared core of the tile assembler
-    (encode_point_tiles_sorted) and the salted partial-encode stage whose
+    (encode_point_tiles_sorted_raw) and the salted partial-encode stage whose
     partials fastmerge re-frames.
 
     Rows are pre-sorted by tile then feature_id; counts[i] > 0 is the row
@@ -385,31 +385,6 @@ def encode_point_features_sorted(
     }
 
 
-def encode_point_tiles_sorted(
-    counts: np.ndarray,
-    fids: np.ndarray | None,
-    px: np.ndarray,
-    py: np.ndarray,
-    tag_columns: dict[str, tuple[str, np.ndarray]] | None,
-    layer_name: str,
-    extent: int,
-) -> list[bytes]:
-    """Encode MANY single-layer point tiles in one vectorized pass.
-
-    Rows are pre-sorted by tile then feature_id; ``counts[i]`` is the number
-    of rows of tile i. Returns one bytes object per tile, byte-identical to
-    encode_point_tile on each tile's slice (asserted in tests): the per-tile
-    first-seen tag dictionary is reproduced batch-wide via a grouped
-    first-occurrence ranking instead of per-tile factorize.
-    """
-    buf, tile_starts, tile_total = encode_point_tiles_sorted_raw(
-        counts, fids, px, py, tag_columns, layer_name, extent
-    )
-    mem = buf.tobytes()
-    tile_ends = (tile_starts + tile_total).tolist()
-    return [mem[s:e] for s, e in zip(tile_starts.tolist(), tile_ends)]
-
-
 def encode_point_tiles_sorted_raw(
     counts: np.ndarray,
     fids: np.ndarray | None,
@@ -419,11 +394,16 @@ def encode_point_tiles_sorted_raw(
     layer_name: str,
     extent: int,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """encode_point_tiles_sorted without the per-tile bytes slicing:
-    returns ``(buf, tile_starts, tile_total)`` — ONE flat uint8 buffer plus
-    each tile's offset/length, exactly what an Arrow BinaryArray needs
-    (offsets + values buffer). The list-of-bytes wrapper above allocates
-    n_tiles Python objects + a full copy; the Arrow encode path skips both.
+    """Encode MANY single-layer point tiles in one vectorized pass.
+
+    Rows are pre-sorted by tile then feature_id; ``counts[i]`` is the number
+    of rows of tile i. Returns ``(buf, tile_starts, tile_total)`` — ONE flat
+    uint8 buffer plus each tile's offset/length, exactly what an Arrow
+    BinaryArray needs (offsets + values buffer), with no per-tile Python
+    objects. Tile i is ``buf[tile_starts[i]:tile_starts[i] + tile_total[i]]``,
+    byte-identical to encode_point_tile on that tile's slice (asserted in
+    tests): the per-tile first-seen tag dictionary is reproduced batch-wide
+    via a grouped first-occurrence ranking instead of per-tile factorize.
     """
     counts = np.asarray(counts, dtype=np.int64)
     n_tiles = len(counts)

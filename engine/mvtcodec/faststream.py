@@ -80,7 +80,7 @@ def encode_tagged_layers(
     g_len = bcum[np.asarray(woff[1:], dtype=np.int64)] - g_start
 
     # ---- per-tile first-seen tag dictionaries, batch-wide (same grouped
-    # first-occurrence ranking as fastpoints.encode_point_tiles_sorted)
+    # first-occurrence ranking as fastpoints.encode_point_features_sorted)
     tag_blob = b""
     tag_lens = np.zeros(F, dtype=np.int64)
     tags_payload_len = np.zeros(F, dtype=np.int64)

@@ -336,11 +336,12 @@ FROM geotagged GROUP BY 1, 2"""
 # The binary protobuf sink itself has no SQL twin, but its auditable
 # PROJECTION does: the point tiler emits exactly one feature per page per
 # tile, so (z,x,y,n_features) equals the DuckDB per-tile page count — the
-# full encode still runs inside mapInPandas (column pruning can drop the
+# full encode still runs inside mapInArrow (column pruning can drop the
 # mvt column only AFTER the UDF has produced the bytes), so the oracle
 # genuinely audits the encoder's grouping + feature emission. Byte-level
-# correctness is covered by tests/test_fastpoints.py, tests/test_polytiler.py
-# and tests/test_manifest_resume.py.
+# correctness is covered by tests/test_fastpoints.py, the golden tile
+# digests in tests/test_tiler_compact.py, tests/test_polytiler.py and
+# tests/test_manifest_resume.py.
 
 def q_mvt_tiles(spark, sf_dir):
     """B12-B15 flagship: z0-z4 point-tile pyramid, MVT-encoded; auditable

@@ -16,27 +16,16 @@ layer model /root/reference/layer.go:14). Two merge levels:
   framing are rebuilt over the canonical feature order (sorted by id) —
   so the merged layer is BYTE-IDENTICAL to a single-pass encode (the
   engine's canon: layers sorted by name, features by feature id;
-  tests/test_tilemerge.py::test_salted_encode_byte_identical asserts
-  salted == unsalted bytes).
+  tests/test_tiler_compact.py::test_salted_encode_byte_identical
+  asserts salted == unsalted bytes).
 """
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
 
 from engine.mvtcodec import pbwire, tile as tilemod
 from engine.mvtcodec.pbwire import WT_LEN
-
-from .tiler import _group_bounds, carry_group_iter
-
-MERGED_SCHEMA = (
-    "z int, x bigint, y bigint, mvt binary, n_features long, n_bytes long, "
-    "n_layers int"
-)
 
 
 def split_tile_layers(data: bytes) -> list[tuple[str, bytes]]:
@@ -246,42 +235,3 @@ def merge_tile_blobs(blobs) -> bytes:
                 payload = _merge_layer(n, msgs)
         out.append(pbwire.len_delimited(3, payload))
     return b"".join(out)
-
-
-def merge_tiles(partials: DataFrame) -> DataFrame:
-    """(z,x,y,mvt,n_features) partial-tile rows -> ONE multi-layer tile row
-    per (z,x,y). One shuffle on the tile key; the merge itself is wire-level
-    splicing (or feature re-framing for same-name salt partials)."""
-
-    def merge_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        starts = list(_group_bounds(pdf)) + [len(pdf)]
-        out = {k: [] for k in ("z", "x", "y", "mvt", "n_features", "n_bytes", "n_layers")}
-        for s, e in zip(starts[:-1], starts[1:]):
-            blobs = [bytes(b) for b in pdf["mvt"].iloc[s:e]]
-            data = merge_tile_blobs(blobs)
-            out["z"].append(int(pdf["z"].iloc[s]))
-            out["x"].append(int(pdf["x"].iloc[s]))
-            out["y"].append(int(pdf["y"].iloc[s]))
-            out["mvt"].append(data)
-            out["n_features"].append(int(pdf["n_features"].iloc[s:e].sum()))
-            out["n_bytes"].append(len(data))
-            out["n_layers"].append(sum(1 for _ in split_tile_layers(data)))
-        return pd.DataFrame(
-            {
-                "z": pd.array(out["z"], dtype="int32"),
-                "x": pd.array(out["x"], dtype="int64"),
-                "y": pd.array(out["y"], dtype="int64"),
-                "mvt": out["mvt"],
-                "n_features": pd.array(out["n_features"], dtype="int64"),
-                "n_bytes": pd.array(out["n_bytes"], dtype="int64"),
-                "n_layers": pd.array(out["n_layers"], dtype="int32"),
-            }
-        )
-
-    parted = partials.select("z", "x", "y", "mvt", "n_features").repartition(
-        "z", "x", "y"
-    ).sortWithinPartitions("z", "x", "y")
-    merged = parted.mapInPandas(
-        lambda b: carry_group_iter(b, merge_batch), MERGED_SCHEMA
-    )
-    return merged.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))

@@ -3,13 +3,18 @@
 Pipeline shape (SURVEY §3.4): indexed features are optionally capped per
 tile (deterministic top-K by feature_id — the scale guard for mega-tiles:
 z0 contains EVERY feature, so an uncapped group would OOM one executor at
-100 TB), then ``repartitionByRange(z,x,y)`` + ``sortWithinPartitions`` so
-each tile's features are CONTIGUOUS, then ``mapInPandas`` encodes MANY
-tiles per Arrow batch (group boundaries detected vectorized, incomplete
-tail groups carried into the next batch). This avoids
-``groupBy().applyInPandas``'s per-group overhead, which dominates when the
-pyramid has tens of thousands of small tiles (measured 2.6x faster at
-sf0.01, and the win grows with tile count).
+100 TB), then one tile shuffle + ``sortWithinPartitions`` so each tile's
+features are CONTIGUOUS, then a post-sort JVM projection to
+``(gid, qx, qy, feature_id, tags)`` feeds ``mapInArrow``, which encodes
+MANY tiles per Arrow batch (group boundaries detected vectorized on the
+packed int64 gid, incomplete tail groups carried into the next batch).
+Every point-tile entry point — ``encode_point_tiles`` over materialized
+(z, x, y, px, py), ``encode_point_tiles_compact`` and the salted
+``encode_point_partials_compact`` over (u, v) — ends in this one carry and
+one kernel per output schema. This avoids ``groupBy().applyInPandas``'s
+per-group overhead, which dominates when the pyramid has tens of
+thousands of small tiles (measured 2.6x faster at sf0.01, and the win
+grows with tile count).
 
 Byte determinism: features sorted by (z,x,y,feature_id) by the partitioner,
 layers sorted by name inside the codec — output bytes are invariant under
@@ -27,7 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from engine.mvtcodec import fastpoints, pbwire
-from engine.mvtcodec.geomstream import quantize
 
 EXTENT = 4096
 
@@ -62,50 +66,16 @@ def cap_features_per_tile(
 GROUP_COLS = ("z", "x", "y")
 
 
-def _group_bounds(pdf: pd.DataFrame, cols: tuple[str, ...] = GROUP_COLS) -> np.ndarray:
-    """Start offsets of each group run in a pre-sorted frame."""
-    first = pdf[cols[0]].to_numpy()
+def _group_bounds(pdf: pd.DataFrame) -> np.ndarray:
+    """Start offsets of each (z, x, y) run in a pre-sorted frame."""
+    first = pdf[GROUP_COLS[0]].to_numpy()
     change = np.empty(len(first), dtype=bool)
     change[0] = True
     change[1:] = np.diff(first) != 0
-    for c in cols[1:]:
+    for c in GROUP_COLS[1:]:
         v = pdf[c].to_numpy()
         change[1:] |= np.diff(v) != 0
     return np.flatnonzero(change)
-
-
-def _encode_batch(
-    pdf: pd.DataFrame,
-    layer_name: str,
-    tag_cols,
-    extent: int,
-    group_cols: tuple[str, ...] = GROUP_COLS,
-) -> pd.DataFrame:
-    starts = _group_bounds(pdf, group_cols)
-    counts = np.diff(np.append(starts, len(pdf)))
-    tags = {
-        col: (vt, pdf[col].to_numpy(dtype=object if vt == "string" else None))
-        for col, vt in tag_cols
-    }
-    blobs = fastpoints.encode_point_tiles_sorted(
-        counts,
-        pdf["feature_id"].to_numpy(dtype=np.int64),
-        quantize(pdf["px"].to_numpy()),
-        quantize(pdf["py"].to_numpy()),
-        tags,
-        layer_name,
-        extent,
-    )
-    return pd.DataFrame(
-        {
-            "z": pd.array(pdf["z"].to_numpy()[starts], dtype="int32"),
-            "x": pdf["x"].to_numpy()[starts],
-            "y": pdf["y"].to_numpy()[starts],
-            "mvt": blobs,
-            "n_features": counts,
-            "n_bytes": [len(b) for b in blobs],
-        }
-    )
 
 
 def _gid_bounds(gid: np.ndarray) -> np.ndarray:
@@ -116,48 +86,51 @@ def _gid_bounds(gid: np.ndarray) -> np.ndarray:
     return np.flatnonzero(change)
 
 
-def _encode_group_arrow(cols, layer_name, tag_cols, extent):
-    """Arrow-native tile encode for one-or-more COMPLETE gid groups.
+def _tag_arrays(cols, tag_cols) -> dict:
+    """Tag columns in the form the fastpoints kernels take: string tags
+    dictionary-encoded in Arrow C++ (codes + a tiny unique list, no
+    per-row Python objects), other types as numpy.
 
-    ``cols``: numpy int64 arrays for gid/qx/qy/feature_id, pyarrow arrays
-    for tag columns. No pandas frame, no per-row Python objects anywhere:
-    string tags dictionary-encode in Arrow C++ (codes + a tiny unique
-    list), and the output binary column is built straight from the
-    encoder's flat buffer + offsets (encode_point_tiles_sorted_raw) — the
-    pandas path allocated one Python str per row and one bytes object per
-    tile, which dominated the encode stage's worker-side allocation churn
-    on fault-limited hosts."""
-    import pyarrow as pa
-
-    gid = cols["gid"]
-    starts = _gid_bounds(gid)
-    counts = np.diff(np.append(starts, len(gid)))
+    Null values raise ValueError: dictionary_encode() leaves null INDICES,
+    which the int64 cast would turn into garbage codes (and a null number
+    would become NaN), so a null would otherwise corrupt tag bytes
+    silently."""
     tags = {}
     for c, vt in tag_cols:
         arr = cols[c]
-        if isinstance(arr, np.ndarray):
-            tags[c] = (vt, arr)
-        elif vt == "string":
-            if arr.null_count:
-                # pre-r6 pandas factorize encoded nulls as a real dictionary
-                # entry; dictionary_encode() leaves null INDICES, which the
-                # int64 cast below would turn into garbage codes — fail
-                # loudly instead of corrupting tag bytes (ADVICE r6)
-                raise ValueError(
-                    "null string tag values are not supported by the Arrow "
-                    "encode path; fill or drop nulls upstream"
-                )
+        if arr.null_count:
+            raise ValueError(
+                f"null tag values in column {c!r} are not supported; "
+                "fill or drop nulls upstream"
+            )
+        if vt == "string":
             d = arr.dictionary_encode()
             codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
             tags[c] = (vt, (codes, d.dictionary.to_pylist()))
         else:
             tags[c] = (vt, arr.to_numpy(zero_copy_only=False))
+    return tags
+
+
+def _encode_group_arrow(cols, layer_name, tag_cols, extent):
+    """Arrow-native tile encode for one-or-more COMPLETE gid groups.
+
+    ``cols``: numpy int64 arrays for gid/qx/qy/feature_id, pyarrow arrays
+    for tag columns. No pandas frame, no per-row Python objects anywhere:
+    the output binary column is built straight from the encoder's flat
+    buffer + offsets (encode_point_tiles_sorted_raw), with no Python str
+    per row or bytes object per tile."""
+    import pyarrow as pa
+
+    gid = cols["gid"]
+    starts = _gid_bounds(gid)
+    counts = np.diff(np.append(starts, len(gid)))
     buf, tstarts, ttotal = fastpoints.encode_point_tiles_sorted_raw(
         counts,
         cols["feature_id"],
         cols["qx"],
         cols["qy"],
-        tags,
+        _tag_arrays(cols, tag_cols),
         layer_name,
         extent,
     )
@@ -250,10 +223,10 @@ def carry_group_iter_arrow(batches, encode_fn, tag_names: frozenset):
 
 
 def carry_group_iter(
-    batches: Iterator[pd.DataFrame], encode_fn, cols: tuple[str, ...] = GROUP_COLS
+    batches: Iterator[pd.DataFrame], encode_fn
 ) -> Iterator[pd.DataFrame]:
-    """Drive ``encode_fn`` over frames whose key groups are COMPLETE,
-    given a stream of Arrow batches pre-sorted by ``cols``.
+    """Drive ``encode_fn`` over frames whose (z, x, y) groups are
+    COMPLETE, given a stream of Arrow batches pre-sorted by (z, x, y).
 
     The (possibly incomplete) trailing group is carried as a LIST of
     chunks and concatenated exactly once when the group completes — a
@@ -272,13 +245,13 @@ def carry_group_iter(
     for pdf in batches:
         if not len(pdf):
             continue
-        starts = _group_bounds(pdf, cols)
+        starts = _group_bounds(pdf)
         tail = int(starts[-1])
         body_start = 0
         if chunks:
             prev = chunks[-1].iloc[-1]
             first = pdf.iloc[0]
-            same = all(prev[c] == first[c] for c in cols)
+            same = all(prev[c] == first[c] for c in GROUP_COLS)
             if same and len(starts) == 1:
                 chunks.append(pdf)  # batch is one group: keep carrying
                 continue
@@ -292,6 +265,24 @@ def carry_group_iter(
         chunks.append(pdf.iloc[tail:])
     if chunks:
         yield flush()
+
+
+def _encode_tiles(projected: DataFrame, layer_name, tag_cols, extent) -> DataFrame:
+    """(gid, qx, qy, feature_id, tags) rows, each gid run contiguous and
+    sorted by feature_id -> one ENCODE_SCHEMA row per tile plus its
+    JVM-side digest (codegen'd sha2 over the binary column, so the Python
+    stage makes no per-tile hashlib calls)."""
+    tag_names = frozenset(c for c, _ in tag_cols)
+
+    def encode_iter(batches):
+        return carry_group_iter_arrow(
+            batches,
+            lambda cols: _encode_group_arrow(cols, layer_name, tag_cols, extent),
+            tag_names,
+        )
+
+    encoded = projected.mapInArrow(encode_iter, ENCODE_SCHEMA)
+    return encoded.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
 
 
 def encode_point_tiles(
@@ -314,14 +305,18 @@ def encode_point_tiles(
     expensive expression pipeline. Tile BYTES are identical in every mode
     (per-tile feature order is fixed by the sort; only cross-tile output
     order changes) — asserted in tests/test_manifest_resume.py.
+
+    After the sort, each row projects to the packed tile key
+    gid = z<<52 | x<<26 | y and qx/qy = cast(px/py as long), which
+    truncates toward zero like mvtcodec.geomstream.quantize. Errors:
+    a row outside 0 <= z <= 25, 0 <= x, y < 2^z fails the job through
+    ``raise_error`` ("tile key out of range"), since its x/y would
+    overflow the 26-bit gid fields and silently merge into another tile;
+    a null tag value raises ValueError ("null tag values ... are not
+    supported") in the encode.
     """
     tag_cols = tuple(tag_cols)
     HILBERT_ORDER = 15  # supports z <= 14: x << (15 - z) stays under 2^15
-
-    def encode_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return carry_group_iter(
-            batches, lambda pdf: _encode_batch(pdf, layer_name, tag_cols, extent)
-        )
 
     cols = ["z", "x", "y", "feature_id", "px", "py"] + [c for c, _ in tag_cols]
     selected = df.select(*cols)
@@ -345,10 +340,30 @@ def encode_point_tiles(
     else:
         parted = selected.repartition("z", "x", "y")
         prepared = parted.sortWithinPartitions("z", "x", "y", "feature_id")
-    encoded = prepared.mapInPandas(encode_iter, ENCODE_SCHEMA)
-    # tile digest JVM-side (codegen'd sha2 over the binary column) — keeps
-    # the Python stage free of per-tile hashlib calls
-    return encoded.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
+    in_range = F.expr(
+        "z BETWEEN 0 AND 25 AND x >= 0 AND y >= 0 "
+        "AND x < shiftleft(cast(1 as bigint), z) "
+        "AND y < shiftleft(cast(1 as bigint), z)"
+    )
+    gid = F.expr(
+        "shiftleft(cast(z as bigint), 52) | shiftleft(cast(x as bigint), 26) "
+        "| cast(y as bigint)"
+    )
+    out_of_range = F.raise_error(
+        F.format_string(
+            "tile key out of range: z=%s x=%s y=%s "
+            "(need 0 <= z <= 25, 0 <= x, y < 2^z)",
+            "z", "x", "y",
+        )
+    )
+    projected = prepared.select(
+        F.when(in_range, gid).otherwise(out_of_range).alias("gid"),
+        F.col("px").cast("long").alias("qx"),
+        F.col("py").cast("long").alias("qy"),
+        "feature_id",
+        *[c for c, _ in tag_cols],
+    )
+    return _encode_tiles(projected, layer_name, tag_cols, extent)
 
 
 def encode_shuffle_partitions(spark) -> int:
@@ -372,20 +387,22 @@ def encode_point_tiles_compact(
     extent: int = EXTENT,
 ) -> DataFrame:
     """Shuffle-lean pyramid encode: ``df`` carries (u, v, feature_id,
-    tags...) and only (z, u, v, feature_id, tags) ride the tile shuffle —
-    the derived (x, y, px, py) columns (40%% of the shuffled bytes in the
-    standard path) are reconstructed AFTER the shuffle in the encode batch
-    with the same IEEE double expressions, so the output is BYTE-IDENTICAL
-    to encode_point_tiles (asserted in tests/test_tiler_compact.py). The
-    partition/sort keys are computed as expressions, never materialized.
-    At 9M rows x 15 zooms per sf0.1 this cuts the dominant shuffle by ~30%;
-    at 100 TB that shuffle is the pipeline's bottleneck, so the saving
-    scales 1:1.
+    tags...) and only (z, u, v, feature_id, tags) — packed into one int64
+    key when the zoom range allows, see _packed_exprs — ride the tile
+    shuffle. The derived (x, y, px, py) columns (40%% of the shuffled bytes
+    of encode_point_tiles' input) are reconstructed AFTER the shuffle with
+    the same IEEE double expressions, so the output is BYTE-IDENTICAL to
+    encode_point_tiles (tests/test_tiler_compact.py checks both against
+    the same golden digests, at z_max 16 on the packed key and at z_max 17
+    on the unpacked one). The partition/sort keys are computed as
+    expressions, never materialized. At 9M rows x 15 zooms per sf0.1 this
+    cuts the dominant shuffle by ~30%; at 100 TB that shuffle is the
+    pipeline's bottleneck, so the saving scales 1:1. Null tag values raise
+    ValueError, like encode_point_tiles.
     """
     if not 0 <= z_min <= z_max <= 25:
         raise ValueError("gid packing supports zoom levels 0..25")
     tag_cols = tuple(tag_cols)
-    zoomed = df.withColumn("z", F.explode(F.sequence(F.lit(z_min), F.lit(z_max))))
     # Final-exchange width: more, smaller encode tasks let the Python encode
     # stage overlap shuffle reads and keep each task's Arrow/numpy working
     # set inside an already-faulted arena (same rationale as the 16k batch
@@ -393,75 +410,19 @@ def encode_point_tiles_compact(
     # beats 2x cores at EVERY level (8 cores: 10.3s vs 15.9s; 32 cores:
     # 10.5s vs 16.8s same-session), and over-widening regresses (96 parts
     # at 8 cores: 17.5s). Bytes are partitioning-invariant
-    # (carry_group_iter completes tile groups).
+    # (carry_group_iter_arrow completes tile groups).
     n_parts = encode_shuffle_partitions(df.sparkSession)
-    sel, part_sort, project = _compact_shuffle_exprs(z_max, extent, tag_cols)
-    if sel is not None:
-        # r7 packed-key shuffle (guide §2.3, narrower types): (z, u, v) —
-        # 8+8+8 UnsafeRow bytes — collapse into ONE int64 `packed` =
-        # z . floor(u*2^(z_max+12)) . floor(v*2^(z_max+12)) bit fields,
-        # cutting the pyramid's dominant exchange ~30%/row. Exact: u * 2^B
-        # is an exact double (power-of-two scale), floor(u*2^B) >> (B-z)
-        # == floor(u*2^z) and (uq >> (B-12-z)) - (x << 12) == the old
-        # cast(u*scale - x*4096 as long) for every u in [0, 1] (the
-        # pipeline's with_unit domain; clamps keep the u=1.0 edge
-        # byte-identical too). Fits while 5 + 2*(z_max+13) <= 64, i.e.
-        # z_max <= 16 (and extent 4096); larger zooms take the unpacked
-        # path below. Byte-identity vs encode_point_tiles is asserted in
-        # tests/test_tiler_compact.py at both z ranges.
-        parted = zoomed.selectExpr(*sel).repartition(n_parts, *part_sort[:3])
-        prepared = parted.sortWithinPartitions(*part_sort)
-        projected = prepared.selectExpr(*project)
-    else:
-        cols = ["z", "u", "v", "feature_id"] + [c for c, _ in tag_cols]
-        xe, ye = _tile_xy_exprs()
-        parted = zoomed.select(*cols).repartition(n_parts, F.col("z"), xe, ye)
-        prepared = parted.sortWithinPartitions(
-            F.col("z"), xe, ye, F.col("feature_id")
-        )
-        # Post-shuffle, post-sort JVM projection (same stage, whole-stage
-        # codegen): the derived columns reconstruct from (z, u, v) with the
-        # same IEEE double math the Python stage used to do per batch.
-        # Exactness: scale = 2^z * 4096 = 2^(z+12) and x * 4096 are EXACT
-        # doubles, so qx/qy round identically to numpy's
-        # u * scale - x * 4096.0; cast(double as long/int) truncates toward
-        # zero exactly like mvtcodec.geomstream.quantize (non-ANSI Spark
-        # cast == Go's int32() cast, reference marshal.go:190,196). gid
-        # packs (z, x, y) into one int64 (26-bit x/y fields, lexicographic
-        # == numeric order).
-        scale_e = "(cast(shiftleft(1, z) as double) * 4096.0D)"
-        qx_e = f"cast(u * {scale_e} - cast(_x as double) * 4096.0D as long)"
-        qy_e = f"cast(v * {scale_e} - cast(_y as double) * 4096.0D as long)"
-        projected = (
-            prepared.withColumn("_x", xe)
-            .withColumn("_y", ye)
-            .selectExpr(
-                "shiftleft(cast(z as bigint), 52) + shiftleft(_x, 26) + _y as gid",
-                f"{qx_e} as qx",
-                f"{qy_e} as qy",
-                "feature_id",
-                *[c for c, _ in tag_cols],
-            )
-        )
-
-    tag_names = frozenset(c for c, _ in tag_cols)
-
-    def encode_iter(batches):
-        return carry_group_iter_arrow(
-            batches,
-            lambda cols: _encode_group_arrow(cols, layer_name, tag_cols, extent),
-            tag_names,
-        )
-
-    encoded = projected.mapInArrow(encode_iter, ENCODE_SCHEMA)
-    return encoded.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
+    projected = _compact_shuffle(
+        df, z_min, z_max, extent, tag_cols, n_salt=0, n_parts=n_parts
+    )
+    return _encode_tiles(projected, layer_name, tag_cols, extent)
 
 
 def _packed_exprs(z_max: int, extent: int, with_salt: bool):
     """SQL expression strings for the packed one-int64 shuffle key (r7,
     guide §2.3): bit fields [salt(6) .] z(5) . uq(B+1) . vq(B+1) with
     B = z_max + 12, uq = clamp(floor(u * 2^B), 0, 2^B). Returns None when
-    the fields do not fit an int64 (z_max > 16 unsalted / > 10 salted) or
+    the fields do not fit an int64 (z_max > 16 unsalted / > 13 salted) or
     extent != 4096; callers fall back to the unpacked (z, u, v) shuffle.
 
     Exactness (why the derived columns are bit-identical to the unpacked
@@ -511,57 +472,81 @@ def _packed_exprs(z_max: int, extent: int, with_salt: bool):
             "gid": gid, "salt": f"shiftright(packed, {zshift + 5})"}
 
 
-def _compact_shuffle_exprs(z_max: int, extent: int, tag_cols):
-    """Assembled (select, partition+sort, post-shuffle projection) pieces
-    for encode_point_tiles_compact's packed shuffle; (None, None, None)
-    when packing does not apply."""
-    e = _packed_exprs(z_max, extent, with_salt=False)
-    if e is None:
-        return None, None, None
-    tags = [c for c, _ in tag_cols]
-    sel = [f"{e['packed']} as packed", "feature_id", *tags]
-    part_sort = [
-        F.expr(e["z"]), F.expr(e["x"]), F.expr(e["y"]), F.col("feature_id")
-    ]
-    project = [
-        f"{e['gid']} as gid",
-        f"{e['qx']} as qx",
-        f"{e['qy']} as qy",
-        "feature_id",
-        *tags,
-    ]
-    return sel, part_sort, project
+_TILE_X = (
+    "least(cast(shiftleft(1, z) as bigint) - 1, greatest(cast(0 as bigint), "
+    "cast(floor(u * shiftleft(1, z)) as bigint)))"
+)
+_TILE_Y = (
+    "least(cast(shiftleft(1, z) as bigint) - 1, greatest(cast(0 as bigint), "
+    "cast(floor(v * shiftleft(1, z)) as bigint)))"
+)
 
 
 def _tile_xy_exprs():
     """x/y tile expressions over (z, u, v) — used as partition/sort keys
     without materializing the columns into the shuffle."""
-    xe = F.expr(
-        "least(cast(shiftleft(1, z) as bigint) - 1, greatest(cast(0 as bigint), "
-        "cast(floor(u * shiftleft(1, z)) as bigint)))"
-    )
-    ye = F.expr(
-        "least(cast(shiftleft(1, z) as bigint) - 1, greatest(cast(0 as bigint), "
-        "cast(floor(v * shiftleft(1, z)) as bigint)))"
-    )
-    return xe, ye
+    return F.expr(_TILE_X), F.expr(_TILE_Y)
 
 
-def _augment_uv(pdf: pd.DataFrame, extent: int) -> pd.DataFrame:
-    """Reconstruct (x, y, px, py) from (z, u, v) AFTER the shuffle with the
-    same IEEE double expressions the standard path shuffles materialized."""
-    z = pdf["z"].to_numpy()
-    u = pdf["u"].to_numpy()
-    v = pdf["v"].to_numpy()
-    n = np.ldexp(1.0, z.astype(np.int64))  # 2^z exact
-    x = np.minimum(n - 1, np.maximum(0.0, np.floor(u * n))).astype(np.int64)
-    y = np.minimum(n - 1, np.maximum(0.0, np.floor(v * n))).astype(np.int64)
-    scale = n * float(extent)
-    return pdf.assign(
-        x=x, y=y,
-        px=u * scale - x * float(extent),
-        py=v * scale - y * float(extent),
+def _shuffle_exprs(z_max: int, extent: int, tag_cols, salted: bool):
+    """(select, partition+sort, post-shuffle projection) pieces of the
+    compact encoders' tile shuffle over (z, u, v[, _salt], feature_id,
+    tags): the packed one-int64 key when _packed_exprs fits, else the
+    unpacked (z, u, v[, _salt]) columns. The partition keys are
+    ``part_sort[:-1]``; the sort appends feature_id. The salt goes in
+    gid's top bits (grouping is equality-based, so any contiguous total
+    order works; the within-group sort by feature_id fixes the bytes).
+
+    Unpacked exactness: scale = 2^z * 4096 = 2^(z+12) and x * 4096 are
+    EXACT doubles, so qx/qy round identically to numpy's
+    u * scale - x * 4096.0; cast(double as long) truncates toward zero
+    exactly like mvtcodec.geomstream.quantize (Go's int32() cast,
+    reference marshal.go:190,196)."""
+    tags = [c for c, _ in tag_cols]
+    salt = ["_salt"] if salted else []
+    e = _packed_exprs(z_max, extent, salted)
+    if e is not None:
+        sel = [f"{e['packed']} as packed", "feature_id", *tags]
+        keys = [e["z"], e["x"], e["y"]] + ([e["salt"]] if salted else [])
+        gid, qx, qy = e["gid"], e["qx"], e["qy"]
+    else:
+        sel = ["z", "u", "v", "feature_id", *salt, *tags]
+        keys = ["z", _TILE_X, _TILE_Y, *salt]
+        scale = "(cast(shiftleft(1, z) as double) * 4096.0D)"
+        gid = f"shiftleft(cast(z as bigint), 52) + shiftleft({_TILE_X}, 26) + {_TILE_Y}"
+        if salted:
+            gid = f"shiftleft(_salt, 57) + {gid}"
+        qx = f"cast(u * {scale} - cast({_TILE_X} as double) * 4096.0D as long)"
+        qy = f"cast(v * {scale} - cast({_TILE_Y} as double) * 4096.0D as long)"
+    part_sort = [F.expr(k) for k in keys] + [F.col("feature_id")]
+    project = [f"{gid} as gid", f"{qx} as qx", f"{qy} as qy", "feature_id", *tags]
+    return sel, part_sort, project
+
+
+def _compact_shuffle_exprs(z_max: int, extent: int, tag_cols):
+    """_shuffle_exprs for encode_point_tiles_compact's packed (unsalted)
+    shuffle; (None, None, None) when packing does not apply."""
+    if _packed_exprs(z_max, extent, with_salt=False) is None:
+        return None, None, None
+    return _shuffle_exprs(z_max, extent, tag_cols, salted=False)
+
+
+def _compact_shuffle(
+    df: DataFrame, z_min, z_max, extent, tag_cols, n_salt: int, n_parts=None
+) -> DataFrame:
+    """The compact encoders' shared plan: explode (u, v, feature_id, tags)
+    rows over zooms z_min..z_max, salt them when ``n_salt`` > 0, shuffle +
+    sort on the tile key (into ``n_parts`` partitions, or the session
+    default), then project to (gid, qx, qy, feature_id, tags) in the same
+    codegen stage — the input of carry_group_iter_arrow."""
+    zoomed = df.withColumn("z", F.explode(F.sequence(F.lit(z_min), F.lit(z_max))))
+    if n_salt:
+        zoomed = zoomed.withColumn("_salt", _zoom_salt_expr(n_salt))
+    sel, part_sort, project = _shuffle_exprs(z_max, extent, tag_cols, n_salt > 0)
+    parted = zoomed.selectExpr(*sel).repartition(
+        *([n_parts] if n_parts else []), *part_sort[:-1]
     )
+    return parted.sortWithinPartitions(*part_sort).selectExpr(*project)
 
 
 PARTIAL_SCHEMA = (
@@ -569,33 +554,6 @@ PARTIAL_SCHEMA = (
     "feat_len binary, glen binary, vcode binary, dict_blob binary, "
     "dict_lens binary, mvt binary"
 )
-
-
-def encode_point_partials(
-    df: DataFrame,
-    n_salt: int = 8,
-    tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
-    extent: int = EXTENT,
-) -> DataFrame:
-    """B14 stage 1: vectorized feature encode per (tile, salt) group — the
-    geometry + varint heavy lifting for a hot tile (z0 holds every feature)
-    spreads over n_salt tasks instead of one — shipping PARTIAL ARRAYS
-    (framed feature bytes + ids/lengths/dict codes, engine.mvtcodec.
-    fastpoints.encode_point_features_sorted) in PARTIAL_SCHEMA rows (the
-    ``mvt`` column stays null; pre-encoded tiles conformed by
-    tiles_as_partial_rows ride the same schema into one shared merge)."""
-    tag_cols = tuple(tag_cols)
-    gcols = ("z", "x", "y", "_salt")
-    cols = ["z", "x", "y", "feature_id", "px", "py"] + [c for c, _ in tag_cols]
-    encode_partial_batch = _make_partial_encoder(tag_cols)
-    salted = df.select(*cols).withColumn("_salt", _zoom_salt_expr(n_salt))
-    parted = salted.repartition("z", "x", "y", "_salt").sortWithinPartitions(
-        "z", "x", "y", "_salt", "feature_id"
-    )
-    return parted.mapInPandas(
-        lambda b: carry_group_iter(b, encode_partial_batch, gcols),
-        PARTIAL_SCHEMA,
-    )
 
 
 def encode_point_partials_compact(
@@ -606,65 +564,22 @@ def encode_point_partials_compact(
     tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
     extent: int = EXTENT,
 ) -> DataFrame:
-    """Shuffle-lean stage 1: like encode_point_partials but ``df`` carries
-    (u, v, feature_id, tags) and only those ride the salted tile shuffle —
-    the derived columns reconstruct POST-shuffle in JVM codegen and the
-    workers run the same pandas-free Arrow path as the compact tile
-    encoder: (gid, qx, qy, fid, tags) in, with the salt packed into gid's
-    top bits (grouping is equality-based, so any contiguous total order
-    works; within-group sort by feature_id is what fixes the bytes)."""
+    """B14 stage 1: vectorized feature encode per (tile, salt) group — the
+    geometry + varint heavy lifting for a hot tile (z0 holds every feature)
+    spreads over n_salt tasks instead of one — shipping PARTIAL ARRAYS
+    (framed feature bytes + ids/lengths/dict codes, engine.mvtcodec.
+    fastpoints.encode_point_features_sorted) in PARTIAL_SCHEMA rows (the
+    ``mvt`` column stays null; pre-encoded tiles conformed by
+    tiles_as_partial_rows ride the same schema into one shared merge).
+
+    Shuffle-lean like encode_point_tiles_compact: ``df`` carries (u, v,
+    feature_id, tags), only those ride the salted tile shuffle, and the
+    workers run the same pandas-free Arrow carry as the tile encoder, with
+    the salt packed into gid's top bits. Null tag values raise ValueError."""
     if not 0 <= z_min <= z_max <= 25 or not 1 <= n_salt <= 64:
         raise ValueError("gid packing supports z 0..25, n_salt 1..64")
     tag_cols = tuple(tag_cols)
-    zoomed = df.withColumn(
-        "z", F.explode(F.sequence(F.lit(z_min), F.lit(z_max)))
-    ).withColumn("_salt", _zoom_salt_expr(n_salt))
-    tags = [c for c, _ in tag_cols]
-    e = _packed_exprs(z_max, extent, with_salt=True)
-    if e is not None:
-        # r7 packed-key salted shuffle — same one-int64 collapse (and the
-        # same exactness argument) as encode_point_tiles_compact, with the
-        # salt in the top bit field; see _packed_exprs.
-        parted = zoomed.selectExpr(
-            f"{e['packed']} as packed", "feature_id", *tags
-        ).repartition(
-            F.expr(e["z"]), F.expr(e["x"]), F.expr(e["y"]), F.expr(e["salt"])
-        )
-        prepared = parted.sortWithinPartitions(
-            F.expr(e["z"]), F.expr(e["x"]), F.expr(e["y"]),
-            F.expr(e["salt"]), F.col("feature_id"),
-        )
-        projected = prepared.selectExpr(
-            f"{e['gid']} as gid",
-            f"{e['qx']} as qx",
-            f"{e['qy']} as qy",
-            "feature_id",
-            *tags,
-        )
-    else:
-        cols = ["z", "u", "v", "feature_id", "_salt"] + tags
-        xe, ye = _tile_xy_exprs()
-        parted = zoomed.select(*cols).repartition(
-            F.col("z"), xe, ye, F.col("_salt")
-        )
-        prepared = parted.sortWithinPartitions(
-            F.col("z"), xe, ye, F.col("_salt"), F.col("feature_id")
-        )
-        scale_e = "(cast(shiftleft(1, z) as double) * 4096.0D)"
-        qx_e = f"cast(u * {scale_e} - cast(_x as double) * 4096.0D as long)"
-        qy_e = f"cast(v * {scale_e} - cast(_y as double) * 4096.0D as long)"
-        projected = (
-            prepared.withColumn("_x", xe)
-            .withColumn("_y", ye)
-            .selectExpr(
-                "shiftleft(_salt, 57) + shiftleft(cast(z as bigint), 52)"
-                " + shiftleft(_x, 26) + _y as gid",
-                f"{qx_e} as qx",
-                f"{qy_e} as qy",
-                "feature_id",
-                *tags,
-            )
-        )
+    projected = _compact_shuffle(df, z_min, z_max, extent, tag_cols, n_salt=n_salt)
     tag_names = frozenset(c for c, _ in tag_cols)
 
     def encode_iter(batches):
@@ -688,29 +603,9 @@ def _encode_partials_group_arrow(cols, tag_cols):
     gid = cols["gid"]
     starts = _gid_bounds(gid)
     counts = np.diff(np.append(starts, len(gid)))
-    tags = {}
-    for c, vt in tag_cols:
-        arr = cols[c]
-        if isinstance(arr, np.ndarray):
-            tags[c] = (vt, arr)
-        elif vt == "string":
-            if arr.null_count:
-                # pre-r6 pandas factorize encoded nulls as a real dictionary
-                # entry; dictionary_encode() leaves null INDICES, which the
-                # int64 cast below would turn into garbage codes — fail
-                # loudly instead of corrupting tag bytes (ADVICE r6)
-                raise ValueError(
-                    "null string tag values are not supported by the Arrow "
-                    "encode path; fill or drop nulls upstream"
-                )
-            d = arr.dictionary_encode()
-            codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            tags[c] = (vt, (codes, d.dictionary.to_pylist()))
-        else:
-            tags[c] = (vt, arr.to_numpy(zero_copy_only=False))
     fids = cols["feature_id"]
     fb = fastpoints.encode_point_features_sorted(
-        counts, fids, cols["qx"], cols["qy"], tags
+        counts, fids, cols["qx"], cols["qy"], _tag_arrays(cols, tag_cols)
     )
     feat_len = fb["feat_len"]
     b_off = np.concatenate([[0], np.cumsum(feat_len)])
@@ -762,70 +657,11 @@ def _zoom_salt_expr(n_salt: int):
     salt fan-out halves per zoom too (z0: n_salt ways, ... deep zooms: 1).
     Single-partial tiles skip the merge re-framing entirely (fastmerge
     fast path) — only genuinely hot tiles pay the two-stage cost. Salting
-    is routing only; bytes are invariant (tests/test_tilemerge.py)."""
+    is routing only; bytes are invariant (tests/test_tiler_compact.py)."""
     return F.pmod(
         F.xxhash64("feature_id"),
         F.greatest(F.lit(1), F.expr(f"shiftright({n_salt}, z)")),
     )
-
-
-def _make_partial_encoder(tag_cols: tuple[tuple[str, str], ...]):
-    gcols = ("z", "x", "y", "_salt")
-
-    def encode_partial_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        starts = _group_bounds(pdf, gcols)
-        counts = np.diff(np.append(starts, len(pdf)))
-        tags = {
-            col: (vt, pdf[col].to_numpy(dtype=object if vt == "string" else None))
-            for col, vt in tag_cols
-        }
-        fids = pdf["feature_id"].to_numpy(dtype=np.int64)
-        fb = fastpoints.encode_point_features_sorted(
-            counts, fids, quantize(pdf["px"].to_numpy()),
-            quantize(pdf["py"].to_numpy()), tags,
-        )
-        feat_len = fb["feat_len"]
-        b_off = np.concatenate([[0], np.cumsum(feat_len)])
-        block = fb["block"].tobytes()
-        vblob = fb["vblob"].tobytes()
-        e_bounds = fb["e_bounds"]
-        entry_lens = fb["entry_lens"]
-        ends = np.append(starts[1:], len(pdf))
-        out = {k: [] for k in (
-            "z", "x", "y", "n_features", "fids", "block", "feat_len",
-            "glen", "vcode", "dict_blob", "dict_lens",
-        )}
-        for i, (s, e) in enumerate(zip(starts, ends)):
-            out["z"].append(int(pdf["z"].iloc[s]))
-            out["x"].append(int(pdf["x"].iloc[s]))
-            out["y"].append(int(pdf["y"].iloc[s]))
-            out["n_features"].append(int(e - s))
-            out["fids"].append(fids[s:e].tobytes())
-            out["block"].append(block[b_off[s] : b_off[e]])
-            out["feat_len"].append(feat_len[s:e].astype(np.int32).tobytes())
-            out["glen"].append(fb["glen"][s:e].astype(np.int32).tobytes())
-            out["vcode"].append(fb["vcode"][s:e].astype(np.int32).tobytes())
-            out["dict_blob"].append(
-                vblob[fb["vstart"][i] : fb["vstart"][i] + fb["vlen"][i]]
-            )
-            out["dict_lens"].append(
-                entry_lens[e_bounds[i] : e_bounds[i + 1]].astype(np.int32).tobytes()
-            )
-        return pd.DataFrame(
-            {
-                "z": pd.array(out["z"], dtype="int32"),
-                "x": pd.array(out["x"], dtype="int64"),
-                "y": pd.array(out["y"], dtype="int64"),
-                "n_features": pd.array(out["n_features"], dtype="int64"),
-                **{k: out[k] for k in (
-                    "fids", "block", "feat_len", "glen", "vcode",
-                    "dict_blob", "dict_lens",
-                )},
-                "mvt": [None] * len(out["z"]),
-            }
-        )
-
-    return encode_partial_batch
 
 
 def tiles_as_partial_rows(tiles: DataFrame) -> DataFrame:
@@ -946,20 +782,6 @@ def merge_partial_tiles(
         )
     )
     return merged.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
-
-
-def encode_point_tiles_salted(
-    df: DataFrame,
-    n_salt: int = 8,
-    layer_name: str = "pages",
-    tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
-    extent: int = EXTENT,
-) -> DataFrame:
-    """B14 mega-tile path: encode_point_partials -> merge_partial_tiles.
-    Output is BYTE-IDENTICAL to the unsalted encoder
-    (tests/test_tilemerge.py asserts it)."""
-    stage1 = encode_point_partials(df, n_salt, tag_cols, extent)
-    return merge_partial_tiles(stage1, layer_name, tag_cols, extent)
 
 
 def decode_layer_counts(tiles: DataFrame) -> DataFrame:

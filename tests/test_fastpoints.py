@@ -96,9 +96,7 @@ def test_batch_encoder_matches_per_tile():
     langs = rng.choice(["en", "de", "zh", "fr"], n).astype(object)
     src = rng.choice(["web", "en"], n).astype(object)  # "en" shared across cols
     tags = {"lang": ("string", langs), "source": ("string", src)}
-    batch = fastpoints.encode_point_tiles_sorted(
-        counts, fids, px, py, tags, "pages", 4096
-    )
+    batch = _raw_tiles(counts, fids, px, py, tags, "pages", 4096)
     starts = np.cumsum(counts) - counts
     for i, (s, c) in enumerate(zip(starts, counts)):
         e = s + c
@@ -108,6 +106,13 @@ def test_batch_encoder_matches_per_tile():
         )
         assert batch[i] == single, f"tile {i} differs"
     # no-tag + no-id variant
-    batch2 = fastpoints.encode_point_tiles_sorted(counts, None, px, py, {}, "p", 512)
+    batch2 = _raw_tiles(counts, None, px, py, {}, "p", 512)
     for i, (s, c) in enumerate(zip(starts, counts)):
         assert batch2[i] == fastpoints.encode_point_tile("p", 512, None, px[s:s+c], py[s:s+c])
+
+
+def _raw_tiles(*args) -> list[bytes]:
+    """Per-tile bytes sliced out of encode_point_tiles_sorted_raw's flat
+    buffer — the kernel the tile encoders run."""
+    buf, starts, total = fastpoints.encode_point_tiles_sorted_raw(*args)
+    return [buf[s : s + t].tobytes() for s, t in zip(starts, total)]

@@ -1,5 +1,6 @@
 """B14 partial-encode + layer-merge: wire-level layer splicing, same-name
-feature re-framing, and salted == unsalted byte identity."""
+feature re-framing, and salted == unsalted byte identity (the golden
+digests both sides must match are in tests/test_tiler_compact.py)."""
 
 from __future__ import annotations
 
@@ -57,14 +58,16 @@ def test_split_tile_layers_roundtrip():
 
 
 def test_salted_encode_byte_identical(spark):
-    """encode_point_tiles_salted (partial per (tile, salt) -> merge) must
-    reproduce the unsalted encoder's bytes exactly, for any n_salt."""
-    geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF_DIR)))
-    df = index.with_tiles(index.with_unit(geo), 0, 3)
-    plain = tiler.encode_point_tiles(df).toPandas()
+    """Partial encode per (tile, salt) -> merge must reproduce the unsalted
+    encoder's bytes exactly, for any n_salt."""
+    unit = index.with_unit(
+        index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF_DIR)))
+    )
+    plain = tiler.encode_point_tiles(index.with_tiles(unit, 0, 3)).toPandas()
     want = {(r.z, r.x, r.y): r.mvt_sha256 for r in plain.itertuples()}
     for n_salt in (1, 4):
-        salted = tiler.encode_point_tiles_salted(df, n_salt=n_salt).toPandas()
+        parts = tiler.encode_point_partials_compact(unit, 0, 3, n_salt=n_salt)
+        salted = tiler.merge_partial_tiles(parts).toPandas()
         got = {(r.z, r.x, r.y): r.mvt_sha256 for r in salted.itertuples()}
         assert got == want, f"n_salt={n_salt}"
         assert (salted["n_layers"] == 1).all()
@@ -88,16 +91,19 @@ def test_mixed_same_name_merge_falls_back_to_canon(spark):
     stream's layer must merge through the generic re-framer and still
     produce the canonical bytes of a single-pass encode of the union."""
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF_DIR)))
-    df = index.with_tiles(index.with_unit(geo), 0, 0)  # z0 only: one tile
-    # split by feature_id parity: evens pre-encoded, odds as partials
-    evens = df.filter("pmod(feature_id, 2) = 0")
-    odds = df.filter("pmod(feature_id, 2) = 1")
-    pre = tiler.encode_point_tiles(evens).select("z", "x", "y", "mvt", "n_features")
-    parts = tiler.encode_point_partials(odds, n_salt=2).unionByName(
+    unit = index.with_unit(geo)
+    # split by feature_id parity: evens pre-encoded, odds as partials;
+    # z0 only: one tile
+    evens = unit.filter("pmod(feature_id, 2) = 0")
+    odds = unit.filter("pmod(feature_id, 2) = 1")
+    pre = tiler.encode_point_tiles_compact(evens, 0, 0).select(
+        "z", "x", "y", "mvt", "n_features"
+    )
+    parts = tiler.encode_point_partials_compact(odds, 0, 0, n_salt=2).unionByName(
         tiler.tiles_as_partial_rows(pre)
     )
     merged = tiler.merge_partial_tiles(parts).toPandas()
-    want = tiler.encode_point_tiles(df).toPandas()
+    want = tiler.encode_point_tiles_compact(unit, 0, 0).toPandas()
     assert len(merged) == 1 and len(want) == 1
     assert merged["mvt_sha256"].iloc[0] == want["mvt_sha256"].iloc[0]
     assert int(merged["n_layers"].iloc[0]) == 1
