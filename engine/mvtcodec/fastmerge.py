@@ -1,12 +1,15 @@
 """Vectorized merge of salted point-layer partials (SURVEY B14 stage 2).
 
-The salted encoder's stage 1 (engine.pipeline.tiler.encode_point_partials_compact,
-merged by tiler.merge_partial_tiles) runs
-fastpoints.encode_point_features_sorted per (tile, salt) group and
+The salted encoder's stage 1 (engine.pipeline.tiler.encode_point_partials_compact)
+runs fastpoints.encode_point_features_sorted per (tile, salt) group and
 ships the PARTIAL ARRAYS — framed feature bytes, feature ids, per-feature
 framed/geometry lengths, local dictionary codes, and the local value
-table — instead of assembled tiles. This merge re-frames a tile's partials
-into the canonical single-pass layer with whole-array passes only:
+table — instead of assembled tiles. Stage 2 (tiler.merge_partial_tiles)
+reads them back as numpy views of the Arrow binary columns, one tile's
+rows per call. The same re-framer also merges same-name canonical layers
+parsed back to partial arrays (engine.pipeline.tilemerge._merge_layer_fast).
+This merge re-frames a tile's partials into the canonical single-pass
+layer with whole-array passes only:
 
 - canonical feature order = argsort over the concatenated feature ids;
 - the merged first-seen value dictionary comes from factorizing the

@@ -5,14 +5,17 @@ Extends the point tiler (tiler.py) to the reference's full geometry menu
 every tile its bbox covers (JVM-side explode over the x/y ranges — no UDF),
 its rings explode to a FLAT vertex stream (one fixed-width row per vertex —
 the Arrow-friendly layout), and one shuffle co-locates each tile's vertices.
-A sorted mapInPandas then runs the whole geometry pipeline BATCHED in numpy
-(engine.spatial.clipbatch): Sutherland–Hodgman ring clip and Liang–Barsky
-outline clip across every ring of every tile in an Arrow batch at once,
-quantization by int32 truncation (reference marshal.go:190), winding fix
-(exterior CW / holes CCW in y-down tile space so the reference decoder's
-TurningAngle classification reconstructs them — SURVEY §7.4 item 2), and a
-ragged scatter command-stream encode. Only per-tile protobuf framing stays
-in a Python loop (bounded by tile count, not vertex count).
+A sorted mapInArrow — the point encoders' Arrow group carry
+(tiler.carry_group_iter_arrow) over the packed tile key — then runs the
+whole geometry pipeline BATCHED in numpy (engine.spatial.clipbatch):
+Sutherland–Hodgman ring clip and Liang–Barsky outline clip across every
+ring of every tile in an Arrow batch at once, quantization by int32
+truncation (reference marshal.go:190), winding fix (exterior CW / holes CCW
+in y-down tile space so the reference decoder's TurningAngle classification
+reconstructs them — SURVEY §7.4 item 2), and a ragged scatter
+command-stream encode. Only the per-tile byte join stays in a Python loop
+(bounded by tile count, not vertex count); the tile digest is a JVM-side
+sha2.
 
 ``encode_polygon_tiles_rowwise`` keeps the original per-row applyInPandas
 encoder as the semantics reference; tests/test_polytiler.py asserts the
@@ -39,7 +42,10 @@ from engine.spatial import clip as clipmod, clipbatch
 from engine.spatial.mercator import lnglat_to_unit
 
 from . import fixtures
-from .tiler import EXTENT, TILE_SCHEMA, carry_group_iter
+from .tiler import (
+    ENCODE_SCHEMA, EXTENT, TILE_SCHEMA, _encode_tiles, _gid_bounds, _tag_arrays,
+    split_gid, tile_gid,
+)
 
 BUFFER = 128  # tile-pixel clip buffer around the 0..EXTENT square
 
@@ -253,26 +259,30 @@ def _run_ids(*cols) -> np.ndarray:
     return np.cumsum(change) - 1
 
 
-def _encode_poly_vertex_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Flat vertex frame (complete tiles, sorted by z,x,y,poly_id,ring_idx,
-    vtx_idx) -> one MVT tile row per (z,x,y). All geometry math batched."""
+def _encode_poly_group_arrow(cols):
+    """Flat vertex columns (gid, poly_id, name, ring_idx, lon, lat) of
+    complete tiles, sorted by gid, poly_id, ring_idx, vtx_idx -> an
+    ENCODE_SCHEMA RecordBatch, one row per tile with at least one feature.
+    All geometry math batched. A null ``name`` raises ValueError."""
+    import pyarrow as pa
+
     lo, hi = -float(BUFFER), float(EXTENT + BUFFER)
-    z = pdf["z"].to_numpy()
-    x = pdf["x"].to_numpy()
-    y = pdf["y"].to_numpy()
-    pid = pdf["poly_id"].to_numpy()
-    ridx = pdf["ring_idx"].to_numpy()
-    u, v = lnglat_to_unit(pdf["lon"].to_numpy(), pdf["lat"].to_numpy())
+    gid = cols["gid"]
+    z, x, y = split_gid(gid)
+    pid = cols["poly_id"]
+    ridx = cols["ring_idx"]
+    codes, uniq = _tag_arrays(cols, (("name", "string"),))["name"][1]
+    u, v = lnglat_to_unit(cols["lon"], cols["lat"])
     scale = np.ldexp(np.float64(EXTENT), z.astype(np.int64))  # 4096 * 2^z
     pts = np.stack(
         [u * scale - x * float(EXTENT), v * scale - y * float(EXTENT)], axis=1
     )
 
-    rid = _run_ids(z, x, y, pid, ridx)
+    rid = _run_ids(gid, pid, ridx)
     r_starts = clipbatch.ring_starts(rid)
     n_rings = len(r_starts)
-    r_tile = _run_ids(z, x, y)[r_starts]  # tile ordinal per ring
-    r_poly = _run_ids(z, x, y, pid)[r_starts]  # feature ordinal per ring
+    r_tile = _run_ids(gid)[r_starts]  # tile ordinal per ring
+    r_poly = _run_ids(gid, pid)[r_starts]  # feature ordinal per ring
     r_ext = ridx[r_starts] == 0
     r_row = r_starts  # a representative input row per ring
 
@@ -347,62 +357,42 @@ def _encode_poly_vertex_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     # ---- batched protobuf framing (engine.mvtcodec.faststream): every
     # varint in the output comes from whole-array passes; only the final
     # per-tile byte join is a Python loop (bounded by tile count)
-    names = pdf["name"].to_numpy()
-    poly_layers: dict[int, bytes] = {}
-    line_layers: dict[int, bytes] = {}
-    n_poly: dict[int, int] = {}
-    n_line: dict[int, int] = {}
-    if len(poly_feats):
-        rows = r_row[poly_feats]
-        poly_layers = faststream.encode_tag1_layers(
-            "polygons", EXTENT, r_tile[poly_feats], pid[rows],
-            geomstream.GEOM_POLYGON, poly_words, poly_woff[poly_feat_rings],
-            "name", list(names[rows]),
+    def layers(name, feats, geom_type, words, woff):
+        rows = r_row[feats]
+        return faststream.encode_tagged_layers(
+            name, EXTENT, r_tile[feats], pid[rows], geom_type, words, woff,
+            {"name": ("string", (codes[rows], uniq))},
         )
-        t, c = np.unique(r_tile[poly_feats], return_counts=True)
-        n_poly = dict(zip(t.tolist(), c.tolist()))
-    if len(line_feats):
-        rows = r_row[line_feats]
-        line_layers = faststream.encode_tag1_layers(
-            "outlines", EXTENT, r_tile[line_feats], pid[rows],
-            geomstream.GEOM_LINESTRING, line_words, line_woff[line_feat_parts],
-            "name", list(names[rows]),
+
+    poly_layers = layers(
+        "polygons", poly_feats, geomstream.GEOM_POLYGON, poly_words,
+        poly_woff[poly_feat_rings],
+    )
+    line_layers = layers(
+        "outlines", line_feats, geomstream.GEOM_LINESTRING, line_words,
+        line_woff[line_feat_parts],
+    )
+    n_tiles = int(r_tile[-1]) + 1
+    n_feats = np.bincount(r_tile[poly_feats], minlength=n_tiles) + np.bincount(
+        r_tile[line_feats], minlength=n_tiles
+    )
+    tiles = np.flatnonzero(n_feats)
+    # layer names sorted: "outlines" < "polygons"
+    mvt = [
+        b"".join(
+            pbwire.len_delimited(3, lay[t]) for lay in (line_layers, poly_layers)
+            if t in lay
         )
-        t, c = np.unique(r_tile[line_feats], return_counts=True)
-        n_line = dict(zip(t.tolist(), c.tolist()))
-    tile_first_row = {}
-    for arr in (poly_feats, line_feats):
-        for ring in arr:
-            tile_first_row.setdefault(int(r_tile[ring]), int(r_row[ring]))
-    out = {k: [] for k in ("z", "x", "y", "mvt", "n_features", "n_bytes", "mvt_sha256")}
-    for tile_ord in sorted(tile_first_row):
-        parts = []
-        # layer names sorted: "outlines" < "polygons"
-        if tile_ord in line_layers:
-            parts.append(pbwire.len_delimited(3, line_layers[tile_ord]))
-        if tile_ord in poly_layers:
-            parts.append(pbwire.len_delimited(3, poly_layers[tile_ord]))
-        data = b"".join(parts)
-        row = tile_first_row[tile_ord]
-        out["z"].append(int(z[row]))
-        out["x"].append(int(x[row]))
-        out["y"].append(int(y[row]))
-        out["mvt"].append(data)
-        out["n_features"].append(n_poly.get(tile_ord, 0) + n_line.get(tile_ord, 0))
-        out["n_bytes"].append(len(data))
-        out["mvt_sha256"].append(hashlib.sha256(data).hexdigest())
-    if not out["z"]:
-        return _EMPTY_TILES.copy()
-    return pd.DataFrame(
-        {
-            "z": pd.array(out["z"], dtype="int32"),
-            "x": pd.array(out["x"], dtype="int64"),
-            "y": pd.array(out["y"], dtype="int64"),
-            "mvt": out["mvt"],
-            "n_features": pd.array(out["n_features"], dtype="int64"),
-            "n_bytes": pd.array(out["n_bytes"], dtype="int64"),
-            "mvt_sha256": out["mvt_sha256"],
-        }
+        for t in tiles.tolist()
+    ]
+    return pa.RecordBatch.from_arrays(
+        [
+            *map(pa.array, split_gid(gid[_gid_bounds(gid)][tiles])),
+            pa.array(mvt, type=pa.binary()),
+            pa.array(n_feats[tiles], type=pa.int64()),
+            pa.array([len(d) for d in mvt], type=pa.int64()),
+        ],
+        names=["z", "x", "y", "mvt", "n_features", "n_bytes"],
     )
 
 
@@ -428,14 +418,20 @@ def encode_polygon_tiles(
     spark: SparkSession, sf_dir: str, z_min: int = 0, z_max: int = 6
 ) -> DataFrame:
     """Full polygon/outline tile pyramid: parquet polygon scan -> flat
-    vertex explode -> ONE shuffle on (z,x,y) -> sorted batched encode."""
+    vertex explode -> ONE shuffle on (z,x,y) -> sorted batched encode
+    (TILE_SCHEMA rows). The sorted vertices project to (gid, poly_id, name,
+    ring_idx, lon, lat) and run the point encoders' Arrow carry; vtx_idx
+    only orders the sort. A null polygon name fails the job (ValueError
+    "null tag values in column 'name'")."""
     verts = polygon_vertices(polygons_table(spark, sf_dir), z_min, z_max)
     parted = verts.repartition("z", "x", "y").sortWithinPartitions(
         "z", "x", "y", "poly_id", "ring_idx", "vtx_idx"
     )
-    return parted.mapInPandas(
-        lambda batches: carry_group_iter(batches, _encode_poly_vertex_batch),
-        TILE_SCHEMA,
+    projected = parted.select(
+        tile_gid().alias("gid"), "poly_id", "name", "ring_idx", "lon", "lat"
+    )
+    return _encode_tiles(
+        projected, _encode_poly_group_arrow, ["name"], ENCODE_SCHEMA
     )
 
 

@@ -16,8 +16,8 @@ layer model /root/reference/layer.go:14). Two merge levels:
   framing are rebuilt over the canonical feature order (sorted by id) —
   so the merged layer is BYTE-IDENTICAL to a single-pass encode (the
   engine's canon: layers sorted by name, features by feature id;
-  tests/test_tiler_compact.py::test_salted_encode_byte_identical
-  asserts salted == unsalted bytes).
+  tests/test_tiler_compact.py::test_salted_partials_golden asserts
+  salted == unsalted bytes).
 """
 
 from __future__ import annotations
@@ -213,17 +213,14 @@ def _merge_layer(name: str, msgs: list[bytes]) -> bytes:
     return tilemod.encode_layer(name, {"extent": extent, "features": feats})
 
 
-def merge_tile_blobs(blobs) -> bytes:
-    """Merge partial tiles for ONE (z,x,y) into a single canonical tile.
+def assemble_layers(parts: dict[str, list[bytes]]) -> bytes:
+    """ONE (z,x,y)'s layer messages by name -> a single canonical tile.
 
-    Same-name merges go through the fastmerge whole-array re-framer
-    (_merge_layer_fast) whenever the partials are this engine's canonical
-    layers; the per-feature decode/re-encode path (_merge_layer) remains
-    only as the fallback for foreign or non-canonical input."""
-    parts: dict[str, list[bytes]] = {}
-    for data in blobs:
-        for name, msg in split_tile_layers(data):
-            parts.setdefault(name, []).append(msg)
+    Layers are framed sorted by name. Same-name messages merge through the
+    fastmerge whole-array re-framer (_merge_layer_fast) whenever they are
+    this engine's canonical layers; the per-feature decode/re-encode path
+    (_merge_layer) remains only as the fallback for foreign or
+    non-canonical input."""
     out = []
     for n in sorted(parts):
         msgs = parts[n]
@@ -235,3 +232,12 @@ def merge_tile_blobs(blobs) -> bytes:
                 payload = _merge_layer(n, msgs)
         out.append(pbwire.len_delimited(3, payload))
     return b"".join(out)
+
+
+def merge_tile_blobs(blobs) -> bytes:
+    """Merge partial tiles for ONE (z,x,y) into a single canonical tile."""
+    parts: dict[str, list[bytes]] = {}
+    for data in blobs:
+        for name, msg in split_tile_layers(data):
+            parts.setdefault(name, []).append(msg)
+    return assemble_layers(parts)

@@ -11,10 +11,13 @@ packed int64 gid, incomplete tail groups carried into the next batch).
 Every point-tile entry point — ``encode_point_tiles`` over materialized
 (z, x, y, px, py), ``encode_point_tiles_compact`` and the salted
 ``encode_point_partials_compact`` over (u, v) — ends in this one carry and
-one kernel per output schema. This avoids ``groupBy().applyInPandas``'s
-per-group overhead, which dominates when the pyramid has tens of
-thousands of small tiles (measured 2.6x faster at sf0.01, and the win
-grows with tile count).
+one kernel per output schema, and so do the other grouped tile stages:
+``merge_partial_tiles`` here and ``polytiler.encode_polygon_tiles``. Each
+projects the packed tile key with ``tile_gid`` after its sort, and its
+kernel splits it back with ``split_gid``. This avoids
+``groupBy().applyInPandas``'s per-group overhead, which dominates when the
+pyramid has tens of thousands of small tiles (measured 2.6x faster at
+sf0.01, and the win grows with tile count).
 
 Byte determinism: features sorted by (z,x,y,feature_id) by the partitioner,
 layers sorted by name inside the codec — output bytes are invariant under
@@ -23,15 +26,15 @@ partitioning, salting, and executor count (SURVEY §7.4 item 1).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from engine.mvtcodec import fastpoints, pbwire
+from engine.mvtcodec import fastmerge, fastpoints, pbwire
+
+from . import tilemerge
 
 EXTENT = 4096
 
@@ -63,19 +66,36 @@ def cap_features_per_tile(
     )
 
 
-GROUP_COLS = ("z", "x", "y")
+def tile_gid():
+    """Packed tile key gid = z<<52 | x<<26 | y over (z, x, y) columns, the
+    group key of every carry_group_iter_arrow stage. A row outside
+    0 <= z <= 25, 0 <= x, y < 2^z fails the job through ``raise_error``
+    ("tile key out of range"), since its x/y would overflow the 26-bit gid
+    fields and silently merge into another tile."""
+    in_range = F.expr(
+        "z BETWEEN 0 AND 25 AND x >= 0 AND y >= 0 "
+        "AND x < shiftleft(cast(1 as bigint), z) "
+        "AND y < shiftleft(cast(1 as bigint), z)"
+    )
+    gid = F.expr(
+        "shiftleft(cast(z as bigint), 52) | shiftleft(cast(x as bigint), 26) "
+        "| cast(y as bigint)"
+    )
+    out_of_range = F.raise_error(
+        F.format_string(
+            "tile key out of range: z=%s x=%s y=%s "
+            "(need 0 <= z <= 25, 0 <= x, y < 2^z)",
+            "z", "x", "y",
+        )
+    )
+    return F.when(in_range, gid).otherwise(out_of_range)
 
 
-def _group_bounds(pdf: pd.DataFrame) -> np.ndarray:
-    """Start offsets of each (z, x, y) run in a pre-sorted frame."""
-    first = pdf[GROUP_COLS[0]].to_numpy()
-    change = np.empty(len(first), dtype=bool)
-    change[0] = True
-    change[1:] = np.diff(first) != 0
-    for c in GROUP_COLS[1:]:
-        v = pdf[c].to_numpy()
-        change[1:] |= np.diff(v) != 0
-    return np.flatnonzero(change)
+def split_gid(g: np.ndarray):
+    """gid -> (z int32, x int64, y int64); bits above z (the salt of the
+    partial encoders) are masked off."""
+    mask = (1 << 26) - 1
+    return ((g >> 52) & 31).astype(np.int32), (g >> 26) & mask, g & mask
 
 
 def _gid_bounds(gid: np.ndarray) -> np.ndarray:
@@ -148,13 +168,9 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
     mvt = pa.Array.from_buffers(
         pa.binary(), n_tiles, [None, pa.py_buffer(offsets), pa.py_buffer(buf)]
     )
-    g = gid[starts]
-    mask = (1 << 26) - 1
     return pa.RecordBatch.from_arrays(
         [
-            pa.array((g >> 52).astype(np.int32), type=pa.int32()),
-            pa.array((g >> 26) & mask, type=pa.int64()),
-            pa.array(g & mask, type=pa.int64()),
+            *map(pa.array, split_gid(gid[starts])),
             mvt,
             pa.array(counts, type=pa.int64()),
             pa.array(ttotal.astype(np.int64), type=pa.int64()),
@@ -163,17 +179,25 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
     )
 
 
-def carry_group_iter_arrow(batches, encode_fn, tag_names: frozenset):
-    """carry_group_iter for mapInArrow: same complete-group contract and
-    O(1) mega-group concat, but operating on numpy/pyarrow columns —
-    pandas never enters the worker."""
+def carry_group_iter_arrow(batches, encode_fn, arrow_cols: frozenset):
+    """Drive ``encode_fn`` over column dicts whose gid groups are COMPLETE,
+    given a stream of Arrow RecordBatches pre-sorted so each gid run is
+    contiguous. Columns named in ``arrow_cols`` stay pyarrow arrays, the
+    rest become numpy arrays; pandas never enters the worker.
+
+    The (possibly incomplete) trailing group is carried as a LIST of
+    chunks and concatenated exactly once when the group completes — a
+    mega-tile spanning many Arrow batches (z0 holds every feature) is
+    copied O(1) times, not O(batches) (quadratic carry re-concat measured
+    5-40x slower on the z0-z14 pyramid at sf0.1). ``encode_fn`` receives
+    one or more complete groups per call and returns one RecordBatch."""
     import pyarrow as pa
 
     def to_cols(rb):
         return {
             name: (
                 rb.column(i)
-                if name in tag_names
+                if name in arrow_cols
                 else rb.column(i).to_numpy()
             )
             for i, name in enumerate(rb.schema.names)
@@ -222,67 +246,33 @@ def carry_group_iter_arrow(batches, encode_fn, tag_names: frozenset):
         yield encode_fn(concat_cols(pend))
 
 
-def carry_group_iter(
-    batches: Iterator[pd.DataFrame], encode_fn
-) -> Iterator[pd.DataFrame]:
-    """Drive ``encode_fn`` over frames whose (z, x, y) groups are
-    COMPLETE, given a stream of Arrow batches pre-sorted by (z, x, y).
-
-    The (possibly incomplete) trailing group is carried as a LIST of
-    chunks and concatenated exactly once when the group completes — a
-    mega-tile spanning many Arrow batches (z0 holds every feature) is
-    copied O(1) times, not O(batches) (quadratic carry re-concat measured
-    5-40x slower on the z0-z14 pyramid at sf0.1). ``encode_fn`` receives a
-    frame holding one or more complete groups.
-    """
-    chunks: list[pd.DataFrame] = []
-
-    def flush():
-        group = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        chunks.clear()
-        return encode_fn(group)
-
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        starts = _group_bounds(pdf)
-        tail = int(starts[-1])
-        body_start = 0
-        if chunks:
-            prev = chunks[-1].iloc[-1]
-            first = pdf.iloc[0]
-            same = all(prev[c] == first[c] for c in GROUP_COLS)
-            if same and len(starts) == 1:
-                chunks.append(pdf)  # batch is one group: keep carrying
-                continue
-            if same:
-                body_start = int(starts[1])
-                chunks.append(pdf.iloc[:body_start])
-            yield flush()
-        body = pdf.iloc[body_start:tail]
-        if len(body):
-            yield encode_fn(body)
-        chunks.append(pdf.iloc[tail:])
-    if chunks:
-        yield flush()
-
-
-def _encode_tiles(projected: DataFrame, layer_name, tag_cols, extent) -> DataFrame:
-    """(gid, qx, qy, feature_id, tags) rows, each gid run contiguous and
-    sorted by feature_id -> one ENCODE_SCHEMA row per tile plus its
-    JVM-side digest (codegen'd sha2 over the binary column, so the Python
-    stage makes no per-tile hashlib calls)."""
-    tag_names = frozenset(c for c, _ in tag_cols)
+def _map_groups(projected: DataFrame, encode_fn, arrow_cols, schema) -> DataFrame:
+    """mapInArrow of ``encode_fn`` over complete gid groups of ``projected``
+    (rows with a ``gid`` column, each gid run contiguous)."""
 
     def encode_iter(batches):
-        return carry_group_iter_arrow(
-            batches,
-            lambda cols: _encode_group_arrow(cols, layer_name, tag_cols, extent),
-            tag_names,
-        )
+        return carry_group_iter_arrow(batches, encode_fn, frozenset(arrow_cols))
 
-    encoded = projected.mapInArrow(encode_iter, ENCODE_SCHEMA)
+    return projected.mapInArrow(encode_iter, schema)
+
+
+def _encode_tiles(projected: DataFrame, encode_fn, arrow_cols, schema) -> DataFrame:
+    """_map_groups to tile rows (``schema`` has an ``mvt`` column) plus
+    their JVM-side digest (codegen'd sha2 over the binary column, so the
+    Python stage makes no per-tile hashlib calls)."""
+    encoded = _map_groups(projected, encode_fn, arrow_cols, schema)
     return encoded.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
+
+
+def _encode_points(projected: DataFrame, layer_name, tag_cols, extent) -> DataFrame:
+    """(gid, qx, qy, feature_id, tags) rows, each gid run contiguous and
+    sorted by feature_id -> one TILE_SCHEMA row per tile."""
+    return _encode_tiles(
+        projected,
+        lambda cols: _encode_group_arrow(cols, layer_name, tag_cols, extent),
+        [c for c, _ in tag_cols],
+        ENCODE_SCHEMA,
+    )
 
 
 def encode_point_tiles(
@@ -307,13 +297,11 @@ def encode_point_tiles(
     order changes) — asserted in tests/test_manifest_resume.py.
 
     After the sort, each row projects to the packed tile key
-    gid = z<<52 | x<<26 | y and qx/qy = cast(px/py as long), which
-    truncates toward zero like mvtcodec.geomstream.quantize. Errors:
-    a row outside 0 <= z <= 25, 0 <= x, y < 2^z fails the job through
-    ``raise_error`` ("tile key out of range"), since its x/y would
-    overflow the 26-bit gid fields and silently merge into another tile;
-    a null tag value raises ValueError ("null tag values ... are not
-    supported") in the encode.
+    gid (tile_gid) and qx/qy = cast(px/py as long), which truncates toward
+    zero like mvtcodec.geomstream.quantize. Errors: a row outside
+    0 <= z <= 25, 0 <= x, y < 2^z fails the job ("tile key out of range",
+    see tile_gid); a null tag value raises ValueError ("null tag values
+    ... are not supported") in the encode.
     """
     tag_cols = tuple(tag_cols)
     HILBERT_ORDER = 15  # supports z <= 14: x << (15 - z) stays under 2^15
@@ -340,30 +328,14 @@ def encode_point_tiles(
     else:
         parted = selected.repartition("z", "x", "y")
         prepared = parted.sortWithinPartitions("z", "x", "y", "feature_id")
-    in_range = F.expr(
-        "z BETWEEN 0 AND 25 AND x >= 0 AND y >= 0 "
-        "AND x < shiftleft(cast(1 as bigint), z) "
-        "AND y < shiftleft(cast(1 as bigint), z)"
-    )
-    gid = F.expr(
-        "shiftleft(cast(z as bigint), 52) | shiftleft(cast(x as bigint), 26) "
-        "| cast(y as bigint)"
-    )
-    out_of_range = F.raise_error(
-        F.format_string(
-            "tile key out of range: z=%s x=%s y=%s "
-            "(need 0 <= z <= 25, 0 <= x, y < 2^z)",
-            "z", "x", "y",
-        )
-    )
     projected = prepared.select(
-        F.when(in_range, gid).otherwise(out_of_range).alias("gid"),
+        tile_gid().alias("gid"),
         F.col("px").cast("long").alias("qx"),
         F.col("py").cast("long").alias("qy"),
         "feature_id",
         *[c for c, _ in tag_cols],
     )
-    return _encode_tiles(projected, layer_name, tag_cols, extent)
+    return _encode_points(projected, layer_name, tag_cols, extent)
 
 
 def encode_shuffle_partitions(spark) -> int:
@@ -415,7 +387,7 @@ def encode_point_tiles_compact(
     projected = _compact_shuffle(
         df, z_min, z_max, extent, tag_cols, n_salt=0, n_parts=n_parts
     )
-    return _encode_tiles(projected, layer_name, tag_cols, extent)
+    return _encode_points(projected, layer_name, tag_cols, extent)
 
 
 def _packed_exprs(z_max: int, extent: int, with_salt: bool):
@@ -554,6 +526,15 @@ PARTIAL_SCHEMA = (
     "feat_len binary, glen binary, vcode binary, dict_blob binary, "
     "dict_lens binary, mvt binary"
 )
+# PARTIAL_SCHEMA's partial-array columns -> the dtype their bytes hold
+PARTIAL_COLS = {
+    "fids": np.int64, "block": np.uint8, "feat_len": np.int32, "glen": np.int32,
+    "vcode": np.int32, "dict_blob": np.uint8, "dict_lens": np.int32,
+}
+MERGED_SCHEMA = (
+    "z int, x bigint, y bigint, mvt binary, n_features long, n_bytes long, "
+    "n_layers int"
+)
 
 
 def encode_point_partials_compact(
@@ -580,16 +561,12 @@ def encode_point_partials_compact(
         raise ValueError("gid packing supports z 0..25, n_salt 1..64")
     tag_cols = tuple(tag_cols)
     projected = _compact_shuffle(df, z_min, z_max, extent, tag_cols, n_salt=n_salt)
-    tag_names = frozenset(c for c, _ in tag_cols)
-
-    def encode_iter(batches):
-        return carry_group_iter_arrow(
-            batches,
-            lambda c: _encode_partials_group_arrow(c, tag_cols),
-            tag_names,
-        )
-
-    return projected.mapInArrow(encode_iter, PARTIAL_SCHEMA)
+    return _map_groups(
+        projected,
+        lambda cols: _encode_partials_group_arrow(cols, tag_cols),
+        [c for c, _ in tag_cols],
+        PARTIAL_SCHEMA,
+    )
 
 
 def _encode_partials_group_arrow(cols, tag_cols):
@@ -614,12 +591,8 @@ def _encode_partials_group_arrow(cols, tag_cols):
     e_bounds = fb["e_bounds"]
     entry_lens = fb["entry_lens"]
     ends = np.append(starts[1:], len(gid))
-    g = gid[starts]
-    mask26 = (1 << 26) - 1
     fids64 = np.asarray(fids, dtype=np.int64)
-    out = {k: [] for k in (
-        "fids", "block", "feat_len", "glen", "vcode", "dict_blob", "dict_lens"
-    )}
+    out = {k: [] for k in PARTIAL_COLS}
     for i, (s, e) in enumerate(zip(starts, ends)):
         out["fids"].append(fids64[s:e].tobytes())
         out["block"].append(block[b_off[s] : b_off[e]])
@@ -632,23 +605,14 @@ def _encode_partials_group_arrow(cols, tag_cols):
         out["dict_lens"].append(
             entry_lens[e_bounds[i] : e_bounds[i + 1]].astype(np.int32).tobytes()
         )
-    n = len(starts)
     return pa.RecordBatch.from_arrays(
         [
-            pa.array(((g >> 52) & 31).astype(np.int32), type=pa.int32()),
-            pa.array((g >> 26) & mask26, type=pa.int64()),
-            pa.array(g & mask26, type=pa.int64()),
+            *map(pa.array, split_gid(gid[starts])),
             pa.array(counts, type=pa.int64()),
-            *[pa.array(out[k], type=pa.binary()) for k in (
-                "fids", "block", "feat_len", "glen", "vcode",
-                "dict_blob", "dict_lens",
-            )],
-            pa.nulls(n, pa.binary()),
+            *[pa.array(out[k], type=pa.binary()) for k in PARTIAL_COLS],
+            pa.nulls(len(starts), pa.binary()),
         ],
-        names=[
-            "z", "x", "y", "n_features", "fids", "block", "feat_len",
-            "glen", "vcode", "dict_blob", "dict_lens", "mvt",
-        ],
+        names=["z", "x", "y", "n_features", *PARTIAL_COLS, "mvt"],
     )
 
 
@@ -668,13 +632,9 @@ def tiles_as_partial_rows(tiles: DataFrame) -> DataFrame:
     """Conform pre-encoded tile rows (z, x, y, mvt, n_features) to
     PARTIAL_SCHEMA so another stream's finished tiles ride the SAME merge
     shuffle as the point partials (wire-spliced at the merge task)."""
-    null_b = "cast(null as binary)"
     return tiles.selectExpr(
         "z", "x", "y", "n_features",
-        *[f"{null_b} as {c}" for c in (
-            "fids", "block", "feat_len", "glen", "vcode", "dict_blob",
-            "dict_lens",
-        )],
+        *[f"cast(null as binary) as {c}" for c in PARTIAL_COLS],
         "mvt",
     )
 
@@ -689,99 +649,89 @@ def merge_partial_tiles(
     tile — point partial arrays re-frame into the canonical layer with
     whole-array passes (engine.mvtcodec.fastmerge, zero per-feature
     Python), pre-encoded tiles from other streams split into their layer
-    messages and wire-splice in (same-name collisions fall back to the
-    generic re-framer). Layers sort by name; bytes equal a single-pass
-    multi-layer encode."""
-    from engine.mvtcodec import fastmerge
-
-    from . import tilemerge
-
+    messages, and tilemerge.assemble_layers frames the union (same-name
+    collisions re-frame through fastmerge when the layers are canonical,
+    else through the generic re-framer). Layers sort by name; bytes equal a
+    single-pass multi-layer encode. The sorted rows project to (gid,
+    n_features, partial arrays, mvt) and run the same Arrow carry as the
+    encoders, so every tile's rows reach one merge call whole."""
     tag_cols = tuple(tag_cols)
-    t = len(tag_cols)
     keys_blob = b"".join(
         pbwire.len_delimited(3, c.encode("utf-8")) for c, _ in tag_cols
     )
-
-    def merge_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        starts = list(_group_bounds(pdf)) + [len(pdf)]
-        out = {k: [] for k in (
-            "z", "x", "y", "mvt", "n_features", "n_bytes", "n_layers"
-        )}
-        for s, e in zip(starts[:-1], starts[1:]):
-            partials = []
-            spliced: dict[str, list[bytes]] = {}
-            for i in range(s, e):
-                if pdf["mvt"].iloc[i] is not None:
-                    for nm, msg in tilemerge.split_tile_layers(
-                        bytes(pdf["mvt"].iloc[i])
-                    ):
-                        spliced.setdefault(nm, []).append(msg)
-                    continue
-                nf = int(pdf["n_features"].iloc[i])
-                partials.append(
-                    {
-                        "fids": np.frombuffer(pdf["fids"].iloc[i], dtype=np.int64),
-                        "block": np.frombuffer(pdf["block"].iloc[i], dtype=np.uint8),
-                        "feat_len": np.frombuffer(
-                            pdf["feat_len"].iloc[i], dtype=np.int32
-                        ).astype(np.int64),
-                        "glen": np.frombuffer(
-                            pdf["glen"].iloc[i], dtype=np.int32
-                        ).astype(np.int64),
-                        "vcode": np.frombuffer(
-                            pdf["vcode"].iloc[i], dtype=np.int32
-                        ).astype(np.int64).reshape(nf, t),
-                        "dict_blob": np.frombuffer(
-                            pdf["dict_blob"].iloc[i], dtype=np.uint8
-                        ),
-                        "dict_lens": np.frombuffer(
-                            pdf["dict_lens"].iloc[i], dtype=np.int32
-                        ).astype(np.int64),
-                    }
-                )
-            layers: dict[str, bytes] = {}
-            if partials:
-                layers[layer_name] = fastmerge.merge_point_partials(
-                    partials, layer_name, keys_blob, extent
-                )
-            for nm, msgs in spliced.items():
-                if nm in layers or len(msgs) > 1:
-                    msgs = msgs + ([layers[nm]] if nm in layers else [])
-                    layers[nm] = tilemerge._merge_layer(nm, msgs)
-                else:
-                    layers[nm] = msgs[0]
-            data = b"".join(
-                pbwire.len_delimited(3, layers[nm]) for nm in sorted(layers)
-            )
-            out["z"].append(int(pdf["z"].iloc[s]))
-            out["x"].append(int(pdf["x"].iloc[s]))
-            out["y"].append(int(pdf["y"].iloc[s]))
-            out["mvt"].append(data)
-            out["n_features"].append(int(pdf["n_features"].iloc[s:e].sum()))
-            out["n_bytes"].append(len(data))
-            out["n_layers"].append(len(layers))
-        return pd.DataFrame(
-            {
-                "z": pd.array(out["z"], dtype="int32"),
-                "x": pd.array(out["x"], dtype="int64"),
-                "y": pd.array(out["y"], dtype="int64"),
-                "mvt": out["mvt"],
-                "n_features": pd.array(out["n_features"], dtype="int64"),
-                "n_bytes": pd.array(out["n_bytes"], dtype="int64"),
-                "n_layers": pd.array(out["n_layers"], dtype="int32"),
-            }
-        )
-
-    merged = (
+    projected = (
         parts.repartition("z", "x", "y")
         .sortWithinPartitions("z", "x", "y")
-        .mapInPandas(
-            lambda b: carry_group_iter(b, merge_batch),
-            "z int, x bigint, y bigint, mvt binary, n_features long, "
-            "n_bytes long, n_layers int",
-        )
+        .select(tile_gid().alias("gid"), "n_features", *PARTIAL_COLS, "mvt")
     )
-    return merged.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
+    return _encode_tiles(
+        projected,
+        lambda cols: _merge_group_arrow(
+            cols, layer_name, keys_blob, len(tag_cols), extent
+        ),
+        [*PARTIAL_COLS, "mvt"],
+        MERGED_SCHEMA,
+    )
+
+
+def _binary_rows(arr, dtype) -> list:
+    """Each row of a pyarrow binary array as a numpy ``dtype`` view of its
+    bytes, without copying (None for a null row)."""
+    _, offsets, data = arr.buffers()
+    off = np.frombuffer(offsets, np.int32)[arr.offset : arr.offset + len(arr) + 1]
+    buf = np.empty(0, np.uint8) if data is None else np.frombuffer(data, np.uint8)
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    return [
+        buf[s:e].view(dtype) if ok else None
+        for s, e, ok in zip(off[:-1].tolist(), off[1:].tolist(), valid)
+    ]
+
+
+def _merge_group_arrow(cols, layer_name, keys_blob, t, extent):
+    """MERGED_SCHEMA RecordBatch for one-or-more COMPLETE gid groups of
+    PARTIAL_SCHEMA rows: a row with ``mvt`` set is a pre-encoded tile whose
+    layers splice in; any other row is one partial of the point layer.
+    The per-row loop is bounded by partial rows (tile x salt), not
+    features."""
+    import pyarrow as pa
+
+    gid = cols["gid"]
+    n_features = cols["n_features"]
+    starts = _gid_bounds(gid)
+    ends = np.append(starts[1:], len(gid))
+    mvt = _binary_rows(cols["mvt"], np.uint8)
+    arrays = {k: _binary_rows(cols[k], dt) for k, dt in PARTIAL_COLS.items()}
+    tiles, n_layers = [], []
+    for s, e in zip(starts.tolist(), ends.tolist()):
+        layers: dict[str, list[bytes]] = {}
+        partials = []
+        for i in range(s, e):
+            if mvt[i] is not None:
+                for nm, msg in tilemerge.split_tile_layers(mvt[i].tobytes()):
+                    layers.setdefault(nm, []).append(msg)
+                continue
+            p = {  # fastmerge takes int64 lengths and codes
+                k: a[i].astype(np.int64) if PARTIAL_COLS[k] is np.int32 else a[i]
+                for k, a in arrays.items()
+            }
+            p["vcode"] = p["vcode"].reshape(int(n_features[i]), t)
+            partials.append(p)
+        if partials:
+            layers.setdefault(layer_name, []).append(
+                fastmerge.merge_point_partials(partials, layer_name, keys_blob, extent)
+            )
+        tiles.append(tilemerge.assemble_layers(layers))
+        n_layers.append(len(layers))
+    return pa.RecordBatch.from_arrays(
+        [
+            *map(pa.array, split_gid(gid[starts])),
+            pa.array(tiles, type=pa.binary()),
+            pa.array(np.add.reduceat(n_features, starts), type=pa.int64()),
+            pa.array([len(d) for d in tiles], type=pa.int64()),
+            pa.array(n_layers, type=pa.int32()),
+        ],
+        names=["z", "x", "y", "mvt", "n_features", "n_bytes", "n_layers"],
+    )
 
 
 def decode_layer_counts(tiles: DataFrame) -> DataFrame:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import duckdb
 import pytest
 
@@ -10,6 +12,14 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+def tile_digest(pdf, z_max: int | None = None) -> tuple[int, str]:
+    """(tile count, sha256 of the "z,x,y,mvt_sha256" lines sorted by
+    (z, x, y) and joined by "\n") of collected tile rows, zooms <= z_max."""
+    rows = sorted((int(r.z), int(r.x), int(r.y), r.mvt_sha256) for r in pdf.itertuples())
+    lines = [f"{z},{x},{y},{h}" for z, x, y, h in rows if z_max is None or z <= z_max]
+    return len(lines), hashlib.sha256("\n".join(lines).encode()).hexdigest()
 
 
 @pytest.fixture(scope="session")

@@ -30,7 +30,7 @@ def test_tag1_layers_match_generic_encoder():
                     "tags": [("name", ("string", f"region-{ti}-{j}"))],
                 }
             )
-    layers = faststream.encode_tag1_layers(
+    layers = faststream.encode_tagged_layers(
         "polygons",
         4096,
         np.asarray(tile_ids),
@@ -38,8 +38,7 @@ def test_tag1_layers_match_generic_encoder():
         geomstream.GEOM_POLYGON,
         np.concatenate(all_words),
         np.asarray(woffs, dtype=np.int64),
-        "name",
-        values,
+        {"name": ("string", np.asarray(values, dtype=object))},
     )
     assert set(layers) == {0, 1, 5}
     for ti, feats in per_tile_feats.items():
@@ -69,10 +68,10 @@ def test_duplicate_tag_values_per_tile():
     rng = np.random.default_rng(11)
     names = ["park", "park", "lake", "park"]  # dup values inside tile 3
     words, woff = _geom_fixture(rng, len(names))
-    layers = faststream.encode_tag1_layers(
+    layers = faststream.encode_tagged_layers(
         "polygons", 4096, np.asarray([3, 3, 3, 3]),
         np.arange(4, dtype=np.int64), geomstream.GEOM_POLYGON,
-        words, woff, "name", names,
+        words, woff, {"name": ("string", np.asarray(names, dtype=object))},
     )
     feats = [
         {

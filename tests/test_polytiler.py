@@ -9,9 +9,11 @@ Sutherland-Hodgman clip and int32-truncation quantize.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pytest
 
 from engine.mvtcodec import geomstream, tile as tilemod
-from engine.pipeline import fixtures, polytiler
+from engine.pipeline import fixtures, polytiler, tiler
 from engine.spatial.mercator import lnglat_to_unit
 
 from .conftest import SF_DIR
@@ -121,3 +123,39 @@ def test_coverage_superset_of_emitted_tiles(spark):
     cov_set = set(map(tuple, cov.to_numpy()))
     for t in map(tuple, emitted.to_numpy()):
         assert t in cov_set
+
+
+def _square_batch(name):
+    """One z0 polygon (a 10-degree square, open ring) as the encode
+    kernel's input columns."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([0] * 4, pa.int64()),
+            pa.array([7] * 4, pa.int64()),
+            pa.array([name] * 4, pa.string()),
+            pa.array([0] * 4, pa.int32()),
+            pa.array([0.0, 10.0, 10.0, 0.0]),
+            pa.array([0.0, 0.0, 10.0, 10.0]),
+        ],
+        names=["gid", "poly_id", "name", "ring_idx", "lon", "lat"],
+    )
+
+
+def _encode_kernel(rb):
+    return list(
+        tiler.carry_group_iter_arrow(
+            [rb], polytiler._encode_poly_group_arrow, frozenset({"name"})
+        )
+    )
+
+
+def test_null_polygon_name_raises():
+    """A null name used to be written as the tag string "nan"."""
+    (out,) = _encode_kernel(_square_batch("park"))
+    layers = tilemod.decode_tile(out.column("mvt")[0].as_py())
+    assert [f["tags"] for f in layers["polygons"]["features"]] == [
+        [("name", ("string", "park"))]
+    ]
+    with pytest.raises(ValueError, match="null tag values in column 'name'"):
+        _encode_kernel(_square_batch(None))
+

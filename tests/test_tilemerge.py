@@ -1,15 +1,16 @@
 """B14 partial-encode + layer-merge: wire-level layer splicing, same-name
-feature re-framing, and salted == unsalted byte identity (the golden
-digests both sides must match are in tests/test_tiler_compact.py)."""
+feature re-framing, salted == unsalted byte identity (the golden digests
+both sides must match are in tests/test_tiler_compact.py), and the merged
+multi-layer tile digest."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from engine.mvtcodec import geomstream, tile as tilemod
-from engine.pipeline import fixtures, index, tilemerge, tiler
+from engine.pipeline import fixtures, index, polytiler, tilemerge, tiler
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, tile_digest
 
 
 def _feat(fid, xy, tag):
@@ -88,7 +89,7 @@ def test_salted_compact_encode_byte_identical(spark):
 
 def test_mixed_same_name_merge_falls_back_to_canon(spark):
     """A pre-encoded tile whose layer NAME collides with the partial
-    stream's layer must merge through the generic re-framer and still
+    stream's layer must merge through the same-name re-framer and still
     produce the canonical bytes of a single-pass encode of the union."""
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF_DIR)))
     unit = index.with_unit(geo)
@@ -107,6 +108,25 @@ def test_mixed_same_name_merge_falls_back_to_canon(spark):
     assert len(merged) == 1 and len(want) == 1
     assert merged["mvt_sha256"].iloc[0] == want["mvt_sha256"].iloc[0]
     assert int(merged["n_layers"].iloc[0]) == 1
+
+
+# (tile count, line digest, see conftest.tile_digest) of the merged
+# mvt_combined_tiles tiles at sf0.001, z0-3: point partials (n_salt 8) +
+# polygon/outline tiles. Recorded from the pandas-based merge that preceded
+# the Arrow carry.
+COMBINED_GOLDEN = (85, "b1486fd2cf4a824e36d4b23dd0a4b1d7cb5659099d84c82974df8f95e0aca1d6")
+
+
+def test_combined_tiles_golden(spark):
+    geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF_DIR)))
+    pts = tiler.encode_point_partials_compact(index.with_unit(geo), 0, 3)
+    polys = polytiler.encode_polygon_tiles(spark, SF_DIR, 0, 3)
+    parts = pts.unionByName(
+        tiler.tiles_as_partial_rows(polys.select("z", "x", "y", "mvt", "n_features"))
+    )
+    merged = tiler.merge_partial_tiles(parts).toPandas()
+    assert tile_digest(merged) == COMBINED_GOLDEN
+    assert sorted(set(merged["n_layers"])) == [1, 3]
 
 
 def test_combined_tiles_decode(spark):

@@ -3,13 +3,13 @@ digests, and bad input fails loudly instead of writing wrong bytes."""
 
 from __future__ import annotations
 
-import hashlib
-
+import numpy as np
+import pyarrow as pa
 import pytest
 
-from engine.pipeline import fixtures, index, manifest, tiler
+from engine.pipeline import fixtures, index, manifest, polytiler, tiler
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, tile_digest
 
 # z_max -> (tile count, digest) of the sf0.001 pyramid over zooms 0..z_max.
 # Digest: sha256 of the "z,x,y,mvt_sha256" lines, sorted by (z, x, y) and
@@ -32,13 +32,9 @@ def _assert_golden(pdf, z_max: int) -> None:
     """Check collected tile rows (zooms 0..z_max) against every golden
     digest whose zoom range it covers: a tile's bytes do not depend on
     z_max, only the shuffle key layout does."""
-    rows = sorted((int(r.z), int(r.x), int(r.y), r.mvt_sha256) for r in pdf.itertuples())
     for zm, want in GOLDEN.items():
-        if zm > z_max:
-            continue
-        lines = [f"{z},{x},{y},{h}" for z, x, y, h in rows if z <= zm]
-        got = (len(lines), hashlib.sha256("\n".join(lines).encode()).hexdigest())
-        assert got == want, f"zooms 0-{zm} from a z_max={z_max} run"
+        if zm <= z_max:
+            assert tile_digest(pdf, zm) == want, f"zooms 0-{zm} from a z_max={z_max} run"
 
 
 def test_point_tiles_golden(spark):
@@ -61,12 +57,60 @@ def test_salted_partials_golden(spark):
     unit = _unit(spark)
     assert tiler._packed_exprs(13, tiler.EXTENT, True) is not None
     assert tiler._packed_exprs(14, tiler.EXTENT, True) is None
-    for z_max in (4, 14):  # packed salted key, then unpacked
-        for n_salt in (1, 4):
-            parts = tiler.encode_point_partials_compact(unit, 0, z_max, n_salt=n_salt)
-            merged = tiler.merge_partial_tiles(parts).toPandas()
-            _assert_golden(merged, z_max)
-            assert (merged["n_layers"] == 1).all()
+    # z_max 4: packed salted key, 14: unpacked
+    for z_max, n_salt in ((4, 1), (4, 4), (4, 8), (14, 1), (14, 4)):
+        parts = tiler.encode_point_partials_compact(unit, 0, z_max, n_salt=n_salt)
+        merged = tiler.merge_partial_tiles(parts).toPandas()
+        _assert_golden(merged, z_max)
+        assert (merged["n_layers"] == 1).all()
+
+
+def test_carry_group_iter_arrow_complete_groups():
+    # gid 5 spans four batches (one empty, one all-5), 6 and 8 are single
+    # rows, 7 spans a one-group batch, 9 is the final flush
+    runs = [[5, 5, 5], [5, 5], [], [5, 6, 7, 7], [7], [8], [9, 9], []]
+    firsts = np.cumsum([0] + [len(g) for g in runs])
+    n = int(firsts[-1])
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [
+                pa.array(g, pa.int64()),
+                pa.array(np.arange(s, s + len(g))),
+                pa.array([f"t{r}" for r in range(s, s + len(g))], pa.string()),
+            ],
+            names=["gid", "row", "tag"],
+        )
+        for g, s in zip(runs, firsts.tolist())
+    ]
+    calls = []
+    list(tiler.carry_group_iter_arrow(batches, calls.append, frozenset({"tag"})))
+    # each group reaches exactly one call, whole
+    assert [c["gid"].tolist() for c in calls] == [[5] * 6, [6], [7] * 3, [8], [9, 9]]
+    for cols in calls:
+        assert isinstance(cols["gid"], np.ndarray) and isinstance(cols["tag"], pa.Array)
+    rows = np.concatenate([c["row"] for c in calls])
+    assert rows.tolist() == list(range(n))  # input reproduced in order
+    tags = [t for c in calls for t in c["tag"].to_pylist()]
+    assert tags == [f"t{r}" for r in range(n)]
+
+
+def test_small_arrow_batches(spark):
+    """Tile groups spanning many Arrow batches: at the default batch size
+    every sf0.001 tile fits one batch, so the carry's multi-batch groups
+    only run here."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch = spark.conf.get(key)
+    spark.conf.set(key, "256")
+    try:
+        unit = _unit(spark)
+        _assert_golden(tiler.encode_point_tiles_compact(unit, 0, 4).toPandas(), 4)
+        parts = tiler.encode_point_partials_compact(unit, 0, 4, n_salt=4)
+        _assert_golden(tiler.merge_partial_tiles(parts).toPandas(), 4)
+        new = polytiler.encode_polygon_tiles(spark, SF_DIR, 0, 4).toPandas()
+        old = polytiler.encode_polygon_tiles_rowwise(spark, SF_DIR, 0, 4).toPandas()
+        assert tile_digest(new) == tile_digest(old)
+    finally:
+        spark.conf.set(key, batch)
 
 
 def _rows(spark, *rows):
